@@ -492,7 +492,7 @@ class Engine:
             return self.spark.createDataFrame(
                 [(plan,)], "query_plan string"
             )
-        df = self.spark.sql(rewrite(inner_sql))
+        df = self.spark.sql(self._rewrite(inner_sql))
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()  # type: ignore[attr-defined]
         return self.spark.createDataFrame([(plan,)], "query_plan string")
@@ -512,7 +512,7 @@ class Engine:
         if re.fullmatch(r"[\w.]+", target):
             df = self.spark.table(target)
         else:
-            df = self.spark.sql(rewrite(target))
+            df = self.spark.sql(self._rewrite(target))
         simple = [
             f
             for f in df.schema.fields
@@ -732,7 +732,7 @@ class Engine:
         from .sources import delete_where
 
         path = loc[5:] if loc.startswith("file:") else loc
-        n = delete_where(self.spark, path, rewrite(condition))
+        n = delete_where(self.spark, path, self._rewrite(condition))
         self.spark.sql(f"REFRESH TABLE {table}")
         return self.spark.createDataFrame([(n,)], "rows_deleted long")
 

@@ -14,13 +14,231 @@ grammar: reference presto-parser/.../SqlBase.g4). The gaps are closed here by
 
 The rewriter is deliberately conservative: it only touches text outside
 single-quoted string literals, and every rewrite has a unit test.
+
+Literal and bracket structure is decided in one place, the ``_Scan``
+scanner below (via ``_scan``, ``_outside`` and ``_find_outside``): which
+characters sit inside a literal, where a bracket closes, what is at the
+top level. Passes ask it instead of walking the text themselves.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 import re
+from bisect import bisect_left
 from collections.abc import Callable
+
+# --- literal and bracket structure --------------------------------------
+# _Scan is the one place where the layer decides which characters sit in
+# a '…' literal and how brackets pair up. Every quote toggles the literal
+# state (a doubled '' escape reads as two adjacent literals: the mask is
+# the same), and brackets inside literals do not count. Bracket questions
+# name the set of openers they count: "(" (parens only), "[" (square
+# brackets only), "([" (both kinds at one depth) or "([<" (angle
+# brackets of type spellings too).
+
+_STRUCT_RE = re.compile(r"'[^']*(?:'|\Z)|[()\[\]<>]")
+_CLOSERS = str.maketrans("([<", ")]>")
+_AS_RE = re.compile(r"\bAS\b", re.IGNORECASE)
+_SPACED_AS_RE = re.compile(r"(?= AS )", re.IGNORECASE)  # overlapping
+_FROM_RE = re.compile(r"\bFROM\b", re.IGNORECASE)
+_ON_RE = re.compile(r"\bON\b", re.IGNORECASE)
+_USING_RE = re.compile(r"\bUSING\b", re.IGNORECASE)
+_CONCAT_OP_RE = re.compile(r"\|\|")
+
+
+class _Scan:
+    """Literal spans, bracket depth and bracket partners of one text,
+    from one O(n) pass; per-bracket-set tables are built on first use.
+    Bracket questions count parens by default; list splitting counts
+    parens and square brackets. Get one through ``_scan(sql)``, which
+    keeps recent texts."""
+
+    __slots__ = ("sql", "spans", "_brackets", "_mask", "_tables")
+
+    def __init__(self, sql: str):
+        self.sql = sql
+        self.spans: list[tuple[int, int]] = []  # literal [start, end)
+        self._brackets: list[tuple[int, str]] = []
+        for m in _STRUCT_RE.finditer(sql):
+            if m.group()[0] == "'":
+                self.spans.append(m.span())
+            else:
+                self._brackets.append((m.start(), m.group()))
+        self._mask: list[bool] | None = None
+        self._tables: dict[str, tuple] = {}
+
+    @property
+    def mask(self) -> list[bool]:
+        """True where sql[i] is inside a literal (quotes included). The
+        list is shared by every caller of this scan: read it only."""
+        if self._mask is None:
+            mask = [False] * len(self.sql)
+            for a, b in self.spans:
+                mask[a:b] = [True] * (b - a)
+            self._mask = mask
+        return self._mask
+
+    def _table(self, opens: str) -> tuple:
+        """(positions, level after each, closes by level after, opens by
+        level after) over the brackets of one set."""
+        t = self._tables.get(opens)
+        if t is None:
+            closes = opens.translate(_CLOSERS)
+            pos: list[int] = []
+            level: list[int] = []
+            ends: dict[int, list[int]] = {}
+            starts: dict[int, list[int]] = {}
+            d = 0
+            for i, c in self._brackets:
+                if c in opens:
+                    d += 1
+                    starts.setdefault(d, []).append(i)
+                elif c in closes:
+                    d -= 1
+                    ends.setdefault(d, []).append(i)
+                else:
+                    continue
+                pos.append(i)
+                level.append(d)
+            t = self._tables[opens] = (pos, level, ends, starts)
+        return t
+
+    def depth(self, i: int, opens: str = "(") -> int:
+        """Bracket depth just before sql[i], counted from the start of
+        the text (negative past an unpaired close)."""
+        pos, level, _, _ = self._table(opens)
+        k = bisect_left(pos, i)
+        return level[k - 1] if k else 0
+
+    def match(self, start: int, opens: str = "(") -> int:
+        """Index of the close ending the group that is open at
+        ``start`` (the first close at or after it that takes the depth
+        below its level there), or -1 when the text ends first."""
+        ends = self._table(opens)[2].get(self.depth(start, opens) - 1)
+        if ends:
+            k = bisect_left(ends, start)
+            if k < len(ends):
+                return ends[k]
+        return -1
+
+    def close(self, start: int, opens: str = "(") -> int:
+        """Index just past that close; len(sql) when the group is
+        unclosed."""
+        k = self.match(start, opens)
+        return k + 1 if k >= 0 else len(self.sql)
+
+    def open_of(self, i: int, opens: str = "(") -> int:
+        """Index of the opener of the group that contains sql[i] (for a
+        close: its partner), or -1 when there is none."""
+        starts = self._table(opens)[3].get(self.depth(i, opens))
+        if starts:
+            k = bisect_left(starts, i)
+            if k:
+                return starts[k - 1]
+        return -1
+
+    def top(self, i: int, opens: str = "(") -> bool:
+        """sql[i] is outside literals and at depth 0."""
+        return not self.mask[i] and self.depth(i, opens) == 0
+
+    def top_matches(self, pat: re.Pattern, opens: str = "(") -> list:
+        """Matches of ``pat`` that start outside literals at depth 0."""
+        return [m for m in _outside(pat, self.sql) if not self.depth(
+            m.start(), opens)]
+
+    def last_top(self, pat: re.Pattern, opens: str = "(") -> int | None:
+        """Start of the last top-level match of ``pat``, or None."""
+        ms = self.top_matches(pat, opens)
+        return ms[-1].start() if ms else None
+
+    def balanced(self, opens: str = "(") -> bool:
+        """No close goes below depth 0 and every group closes."""
+        level = self._table(opens)[1]
+        return min(level, default=0) >= 0 and not (level and level[-1])
+
+    def run(self, start: int, stop: re.Pattern | None = None,
+            opens: str = "([") -> list[tuple[int, int]]:
+        """[start, end) spans of the comma-separated items from
+        ``start`` on. The run ends at the close of the group that is open
+        there, at the first match of ``stop`` at that level outside
+        literals, or at the end of the text."""
+        sql, level = self.sql, self.depth(start, opens)
+
+        def at_level(k):
+            return not self.mask[k] and self.depth(k, opens) == level
+
+        end = self.match(start, opens)
+        end = len(sql) if end < 0 else end
+        if stop is not None:
+            m = next((m for m in stop.finditer(sql, start, end)
+                      if at_level(m.start())), None)
+            end = m.start() if m else end
+        cuts = [k for k in range(start, end) if sql[k] == "," and at_level(k)]
+        bounds = [start - 1, *cuts, end]
+        return [(a + 1, b) for a, b in zip(bounds, bounds[1:])]
+
+    def split(self, seps: str = ",", opens: str = "([") -> list[str]:
+        """The text cut at every top-level character of ``seps``."""
+        sql = self.sql
+        cuts = [i for i, c in enumerate(sql)
+                if c in seps and self.top(i, opens)]
+        bounds = [-1, *cuts, len(sql)]
+        return [sql[a + 1 : b] for a, b in zip(bounds, bounds[1:])]
+
+    def items(self) -> list[str]:
+        """Top-level comma items of an argument list, stripped, empty
+        ones dropped."""
+        return [a for a in (a.strip() for a in self.split()) if a]
+
+    def flat(self, opens: str = "([") -> str:
+        """The text with literals, brackets and everything inside
+        brackets blanked: regexes over it see only the top level."""
+        chars = list(self.sql)
+        for a, b in self.spans:
+            chars[a:b] = " " * (b - a)
+        pos, level, _, _ = self._table(opens)
+        for i, d, nxt in zip(pos, level, [*pos[1:], len(chars)]):
+            # a bracket, and the stretch after it when that is nested
+            end = nxt if d else i + 1
+            chars[i:end] = " " * (end - i)
+        return "".join(chars)
+
+
+@functools.lru_cache(maxsize=64)
+def _scan(sql: str) -> _Scan:
+    return _Scan(sql)
+
+
+def _splice(sql: str, edits) -> str:
+    """``sql`` with each non-overlapping (start, end, text) edit applied."""
+    out, last = [], 0
+    for a, b, text in sorted(edits, key=lambda e: e[0]):
+        out += (sql[last:a], text)
+        last = b
+    out.append(sql[last:])
+    return "".join(out)
+
+
+def _outside(pat: re.Pattern, sql: str, pos: int = 0):
+    """Matches of ``pat`` from ``pos`` on whose first character is
+    outside a literal. The regex runs first; the literal state at a
+    candidate comes from the quote parity before it."""
+    last, odd = 0, 0
+    for m in pat.finditer(sql, pos):
+        s = m.start()
+        odd ^= sql.count("'", last, s) & 1
+        last = s
+        if not odd and sql[s] != "'":
+            yield m
+
+
+def _find_outside(pat: re.Pattern, sql: str, pos: int = 0):
+    """First match of ``pat`` from ``pos`` on outside a literal, or None."""
+    m = pat.search(sql, pos)  # most calls find no candidate at all
+    return m and next(_outside(pat, sql, m.start()), None)
+
 
 # Presto name -> Spark name, applied as word-boundary renames outside string
 # literals. Only pure renames belong here; anything needing argument surgery
@@ -147,42 +365,13 @@ def _rewrite_bare_time_keywords(chunk: str) -> str:
     )
 
 
-def _split_literals(sql: str) -> list[tuple[str, bool]]:
-    """Split SQL into (chunk, is_string_literal) segments."""
-    out: list[tuple[str, bool]] = []
-    i, n = 0, len(sql)
-    buf = []
-    in_str = False
-    while i < n:
-        c = sql[i]
-        if not in_str:
-            if c == "'":
-                out.append(("".join(buf), False))
-                buf = [c]
-                in_str = True
-            else:
-                buf.append(c)
-        else:
-            buf.append(c)
-            if c == "'":
-                # '' is an escaped quote inside the literal
-                if i + 1 < n and sql[i + 1] == "'":
-                    buf.append("'")
-                    i += 1
-                else:
-                    out.append(("".join(buf), True))
-                    buf = []
-                    in_str = False
-        i += 1
-    if buf:
-        out.append(("".join(buf), in_str))
-    return out
-
-
 def _apply_outside_literals(sql: str, fn: Callable[[str], str]) -> str:
-    return "".join(
-        chunk if is_lit else fn(chunk) for chunk, is_lit in _split_literals(sql)
-    )
+    out, last = [], 0
+    for a, b in _scan(sql).spans:
+        out += (fn(sql[last:a]), sql[a:b])
+        last = b
+    out.append(fn(sql[last:]))
+    return "".join(out)
 
 
 _UNNEST_HEAD_RE = re.compile(r"CROSS\s+JOIN\s+UNNEST\s*\(", re.IGNORECASE)
@@ -202,7 +391,7 @@ def _values_bound_struct_fields(ident: str, sql: str) -> list[str] | None:
     Catalog columns are not traced — schema-dependent, documented."""
     name = ident.split(".")[-1].strip().lower()
     for m in re.finditer(r"\(\s*VALUES\b", sql, re.IGNORECASE):
-        close = _scan_matching_paren(sql, m.start() + 1)
+        close = _scan(sql).close(m.start() + 1)
         tail = re.match(
             r"\s*(?:AS\s+)?(\w+)\s*\(([^()]*)\)", sql[close:], re.IGNORECASE
         )
@@ -213,11 +402,11 @@ def _values_bound_struct_fields(ident: str, sql: str) -> list[str] | None:
             continue
         pos = cols.index(name)
         body = sql[m.start() + 1 : close - 1].strip()
-        rows = _split_top_level(body[len("VALUES") :].strip())
+        rows = _scan(body[len("VALUES") :].strip()).items()
         if not rows:
             continue
         r0 = rows[0].strip()
-        cells = _split_top_level(r0[1:-1]) if r0.startswith("(") else [r0]
+        cells = _scan(r0[1:-1]).items() if r0.startswith("(") else [r0]
         if pos < len(cells):
             return _unnest_struct_fields(cells[pos])
     return None
@@ -258,9 +447,9 @@ def _unnest_struct_fields(arg: str, ctx: str | None = None) -> list[str] | None:
         t = re.search(r"\bAS\s+ARRAY\s*\(\s*ROW\s*\(", s, re.IGNORECASE)
         if not t:
             return None
-        close = _scan_matching_paren(s, t.end())
+        close = _scan(s).close(t.end())
         names = []
-        for f in _split_top_level(s[t.end() : close - 1]):
+        for f in _scan(s[t.end() : close - 1]).items():
             fm = re.match(r'\s*([A-Za-z_]\w*|"[^"]+")\s+\S', f)
             if not fm:
                 return None  # unnamed field — positional access unsafe
@@ -272,8 +461,8 @@ def _unnest_struct_fields(arg: str, ctx: str | None = None) -> list[str] | None:
         r"(?:ARRAY\s*\[|ARRAY\s*\()\s*(?:ROW|struct)\s*\(", s, re.IGNORECASE
     )
     if m:
-        close = _scan_matching_paren(s, m.end())
-        nf = len(_split_top_level(s[m.end() : close - 1]))
+        close = _scan(s).close(m.end())
+        nf = len(_scan(s[m.end() : close - 1]).items())
         return [f"col{k + 1}" for k in range(nf)]
     if ctx is not None and re.fullmatch(r"[A-Za-z_]\w*(\.[A-Za-z_]\w*)?", s):
         return _values_bound_struct_fields(s, ctx)
@@ -355,24 +544,12 @@ def _rewrite_unnest_all(sql: str) -> str:
         if not m:
             out.append(sql[i:])
             return "".join(out)
-        depth, j = 1, m.end()
-        while j < len(sql) and depth:
-            c = sql[j]
-            if c == "'":
-                j += 1
-                while j < len(sql) and sql[j] != "'":
-                    j += 1
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            j += 1
+        j = _scan(sql).match(m.end()) + 1
+        if not j:  # unclosed
+            out.append(sql[i:])
+            return "".join(out)
         expr = sql[m.end() : j - 1]
-        if depth:
-            out.append(sql[i:j])
-            i = j
-            continue
-        args = _split_top_level(expr)
+        args = _scan(expr).items()
         tm = _UNNEST_TAIL_RE.match(sql, j)
         if tm:
             ordinality = tm.group(1)
@@ -420,9 +597,9 @@ def _rewrite_values_with_lambdas(sql: str) -> str:
         m = _VALUES_OPEN_RE.search(sql, i)
         if m is None:
             return sql
-        close = _scan_matching_paren(sql, m.start() + 1)
+        close = _scan(sql).close(m.start() + 1)
         body = sql[m.start() + 1 : close - 1]
-        items = _split_top_level(body.strip()[len("VALUES") :])
+        items = _scan(body.strip()[len("VALUES") :]).items()
         if not any("->" in it for it in items):
             i = m.end()
             continue
@@ -438,8 +615,8 @@ def _rewrite_values_with_lambdas(sql: str) -> str:
         for it in items:
             it = it.strip()
             vals = (
-                _split_top_level(it[1:-1])
-                if it.startswith("(") and _scan_matching_paren(it, 1) == len(it)
+                _scan(it[1:-1]).items()
+                if it.startswith("(") and _scan(it).close(1) == len(it)
                 and len(cols) > 1
                 else [it]
             )
@@ -477,9 +654,9 @@ def _rewrite_from_unnest(sql: str) -> str:
         if not m:
             out.append(sql[i:])
             return "".join(out)
-        j = _scan_matching_paren(sql, m.end())
+        j = _scan(sql).close(m.end())
         expr = sql[m.end() : j - 1]
-        args = _split_top_level(expr)
+        args = _scan(expr).items()
         tm = _UNNEST_TAIL_RE.match(sql, j)
         if tm:
             ordinality = tm.group(1)
@@ -524,14 +701,7 @@ def _rewrite_try_cast(sql: str) -> str:
         if not m:
             return sql
         # find the close paren matching CAST( and then the TRY's close
-        depth = 1
-        i = m.end()
-        while i < len(sql) and depth:
-            if sql[i] == "(":
-                depth += 1
-            elif sql[i] == ")":
-                depth -= 1
-            i += 1
+        i = _scan(sql).close(m.end())
         # i is just past CAST's ')'; skip whitespace to TRY's ')'
         j = i
         while j < len(sql) and sql[j].isspace():
@@ -595,19 +765,7 @@ def _rewrite_datetime_patterns(sql: str) -> str:
             out.append(sql[i:])
             return "".join(out)
         fn = m.group(1).lower()
-        # find matching close paren
-        depth, j, in_str = 1, m.end(), False
-        while j < len(sql) and depth:
-            c = sql[j]
-            if in_str:
-                in_str = c != "'"
-            elif c == "'":
-                in_str = True
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            j += 1
+        j = _scan(sql).close(m.end())
         args = sql[m.end() : j - 1]
         pat = re.search(r"'([^']*)'\s*$", args)
         if fn == "date_parse" and pat:
@@ -764,8 +922,8 @@ def _rewrite_joda_datetime_fns(sql: str) -> str:
             out.append(sql[i:])
             return "".join(out)
         fn = m.group(1).lower()
-        j = _scan_matching_paren(sql, m.end())
-        args = _split_top_level(sql[m.end() : j - 1])
+        j = _scan(sql).close(m.end())
+        args = _scan(sql[m.end() : j - 1]).items()
         pm = (
             re.fullmatch(r"\s*'((?:[^']|'')*)'\s*", args[-1])
             if len(args) == 2
@@ -786,19 +944,8 @@ def _rewrite_joda_datetime_fns(sql: str) -> str:
 
 
 def _literal_mask(sql: str) -> list[bool]:
-    """True where sql[i] is inside a '…' string literal (quotes included).
-    Doubled '' escapes read as two adjacent literals — mask still correct."""
-    mask = [False] * len(sql)
-    in_str = False
-    for i, c in enumerate(sql):
-        if in_str:
-            mask[i] = True
-            if c == "'":
-                in_str = False
-        elif c == "'":
-            mask[i] = True
-            in_str = True
-    return mask
+    """True where sql[i] is inside a '…' string literal (quotes included)."""
+    return _scan(sql).mask
 
 
 def _expr_start(sql: str, mask: list[bool], end: int) -> int | None:
@@ -830,17 +977,7 @@ def _expr_start(sql: str, mask: list[bool], end: int) -> int | None:
     start: int | None = None
     while i >= 0:
         if sql[i] in ")]" and not mask[i]:
-            close, openc = sql[i], "(" if sql[i] == ")" else "["
-            depth = 0
-            while i >= 0:
-                if not mask[i]:
-                    if sql[i] == close:
-                        depth += 1
-                    elif sql[i] == openc:
-                        depth -= 1
-                        if depth == 0:
-                            break
-                i -= 1
+            i = _scan(sql).open_of(i, "(" if sql[i] == ")" else "[")
             if i < 0:
                 return start
             j = i - 1
@@ -871,28 +1008,12 @@ _ARRAY_LIT_RE = re.compile(r"\bARRAY\s*\[", re.IGNORECASE)
 def _rewrite_array_literals(sql: str) -> str:
     """Presto ``ARRAY[1, 2]`` (SqlBase.g4 arrayConstructor) → ``array(1, 2)``;
     ``MAP(ARRAY[…], ARRAY[…])`` (MapConstructor) → ``map_from_arrays(…)``."""
-    while True:
-        mask = _literal_mask(sql)
-        m = None
-        for cand in _ARRAY_LIT_RE.finditer(sql):
-            if not mask[cand.start()]:
-                m = cand
-                break
-        if m is None:
-            break
-        depth, j, in_str = 1, m.end(), False
-        while j < len(sql) and depth:
-            c = sql[j]
-            if in_str:
-                in_str = c != "'"
-            elif c == "'":
-                in_str = True
-            elif c == "[":
-                depth += 1
-            elif c == "]":
-                depth -= 1
-            j += 1
-        sql = sql[: m.start()] + "array(" + sql[m.end() : j - 1] + ")" + sql[j:]
+    sc, edits = _scan(sql), []
+    for m in _outside(_ARRAY_LIT_RE, sql):
+        k = sc.match(m.end(), "[")
+        k = k if k >= 0 else len(sql) - 1  # unclosed: the last char closes
+        edits += [(m.start(), m.end(), "array("), (k, k + 1, ")")]
+    sql = _splice(sql, edits)
     return re.sub(r"\bMAP\s*\(\s*array\(", "map_from_arrays(array(", sql)
 
 
@@ -915,7 +1036,7 @@ def _array_call_depth(item: str) -> int | None:
         body = m.group(1).strip()
         if not body:
             return 1
-        first = _split_top_level(body)[0].strip()
+        first = _scan(body).items()[0].strip()
         d = _array_call_depth(first)
         return 1 + (d if d is not None else 0)
     if _SCALAR_LIT_ITEM_RE.match(item):
@@ -1012,15 +1133,7 @@ def _concat_operand_left(sql: str, mask, k: int):
         return None
     c = sql[j]
     if c == ")":
-        depth = 0
-        while j >= 0:
-            if sql[j] == ")" and not mask[j]:
-                depth += 1
-            elif sql[j] == "(" and not mask[j]:
-                depth -= 1
-                if depth == 0:
-                    break
-            j -= 1
+        j = _scan(sql).open_of(j)
         if j < 0:
             return None
         # include a directly-attached callee name
@@ -1086,7 +1199,7 @@ def _concat_operand_right(sql: str, mask, k: int):
         return None
     cm = re.match(r"[A-Za-z_][A-Za-z0-9_.]*\s*\(", sql[j:])
     if cm:
-        return _scan_matching_paren(sql, j + cm.end())
+        return _scan(sql).close(j + cm.end())
     nm = re.match(r"[+-]?\d+(?:\.\d*)?(?:[Ee][+-]?\d+)?", sql[j:])
     if nm:
         return j + nm.end()
@@ -1116,18 +1229,7 @@ def _rewrite_subscripts(sql: str) -> str:
                 if start is not None and not sql[: i].rstrip().upper().endswith(
                     "ARRAY"
                 ):
-                    depth, j, in_str = 1, i + 1, False
-                    while j < len(sql) and depth:
-                        c = sql[j]
-                        if in_str:
-                            in_str = c != "'"
-                        elif c == "'":
-                            in_str = True
-                        elif c == "[":
-                            depth += 1
-                        elif c == "]":
-                            depth -= 1
-                        j += 1
+                    j = _scan(sql).close(i + 1, "[")
                     base = sql[start:i].rstrip()
                     inner = sql[i + 1 : j - 1]
                     sql = (
@@ -1150,15 +1252,10 @@ def _rewrite_at_time_zone(sql: str) -> str:
     """``expr AT TIME ZONE 'zone'`` (SqlBase.g4 AT_TIME_ZONE; desugared by
     DesugarAtTimeZone.java) → at_timezone(expr, 'zone') compat function."""
     while True:
-        mask = _literal_mask(sql)
-        m = None
-        for cand in _AT_TZ_RE.finditer(sql):
-            if not mask[cand.start()]:
-                m = cand
-                break
+        m = _find_outside(_AT_TZ_RE, sql)
         if m is None:
             return sql
-        start = _expr_start(sql, mask, m.start())
+        start = _expr_start(sql, _literal_mask(sql), m.start())
         if start is None:
             return sql
         j = m.end()
@@ -1189,26 +1286,6 @@ def _rewrite_at_time_zone(sql: str) -> str:
         sql = sql[:start] + f"at_timezone({expr}, {zone})" + sql[k:]
 
 
-def _split_top_level(s: str) -> list[str]:
-    """Split an argument list on depth-0 commas (paren/bracket/literal-aware)."""
-    args: list[str] = []
-    depth, in_str, last = 0, False, 0
-    for i, c in enumerate(s):
-        if in_str:
-            in_str = c != "'"
-        elif c == "'":
-            in_str = True
-        elif c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif c == "," and depth == 0:
-            args.append(s[last:i])
-            last = i + 1
-    args.append(s[last:])
-    return [a for a in (a.strip() for a in args) if a != ""] or []
-
-
 def _map_fn_args(sql: str, fname: str, xform) -> str:
     """Rewrite every top-level call of ``fname``: xform(args) returns the new
     argument list (list of strings) or None to leave the call unchanged."""
@@ -1216,17 +1293,12 @@ def _map_fn_args(sql: str, fname: str, xform) -> str:
     out: list[str] = []
     i = 0
     while True:
-        mask = _literal_mask(sql)
-        m = None
-        for cand in pat.finditer(sql, i):
-            if not mask[cand.start()]:
-                m = cand
-                break
+        m = _find_outside(pat, sql, i)
         if m is None:
             out.append(sql[i:])
             return "".join(out)
-        j = _scan_matching_paren(sql, m.end())
-        new_args = xform(_split_top_level(sql[m.end() : j - 1]))
+        j = _scan(sql).close(m.end())
+        new_args = xform(_scan(sql[m.end() : j - 1]).items())
         out.append(sql[i : m.start()])
         if new_args is None:
             out.append(sql[m.start() : j])
@@ -1246,16 +1318,11 @@ def _replace_fn_calls(sql: str, fname: str, builder) -> str:
     pat = re.compile(rf"\b{fname}\s*\(", re.IGNORECASE)
     pos = 0
     while True:
-        mask = _literal_mask(sql)
-        m = None
-        for cand in pat.finditer(sql, pos):
-            if not mask[cand.start()]:
-                m = cand
-                break
+        m = _find_outside(pat, sql, pos)
         if m is None:
             return sql
-        j = _scan_matching_paren(sql, m.end())
-        new = builder(_split_top_level(sql[m.end() : j - 1]))
+        j = _scan(sql).close(m.end())
+        new = builder(_scan(sql[m.end() : j - 1]).items())
         if new is None:
             pos = m.end()
             continue
@@ -1289,7 +1356,7 @@ def _rewrite_sign_typed(sql: str) -> str:
             target = "DECIMAL(1,0)"
         else:
             cm = re.match(r"(?i)^(?:TRY_)?CAST\s*\(", a)
-            if cm and _scan_matching_paren(a, cm.end()) == len(a):
+            if cm and _scan(a).close(cm.end()) == len(a):
                 tm = re.search(
                     r"(?i)\bAS\s+(TINYINT|SMALLINT|INTEGER|INT|BIGINT"
                     r"|REAL|FLOAT|DECIMAL\s*\([^)]*\)|DECIMAL)\s*\)$",
@@ -1583,15 +1650,15 @@ def _expand_grouping_item(item: str) -> list[list[str]] | None:
     m = re.match(r"(GROUPING\s+SETS|CUBE|ROLLUP)\s*\(", item, re.IGNORECASE)
     if m is None:
         return [[item.strip()]]
-    close = _scan_matching_paren(item, m.end())
+    close = _scan(item).close(m.end())
     if item[close:].strip():
         return None
-    entries = _split_top_level(item[m.end() : close - 1])
+    entries = _scan(item[m.end() : close - 1]).items()
 
     def cols(e: str) -> list[str]:
         e = e.strip()
-        if e.startswith("(") and _scan_matching_paren(e, 1) == len(e):
-            return [c for c in _split_top_level(e[1:-1])]
+        if e.startswith("(") and _scan(e).close(1) == len(e):
+            return [c for c in _scan(e[1:-1]).items()]
         return [e]
 
     kind = " ".join(m.group(1).upper().split())
@@ -1621,7 +1688,7 @@ def _rewrite_group_by_distinct(sql: str) -> str:
 
     ``GROUP BY DISTINCT a, ROLLUP (b, c), CUBE (d)`` becomes the deduped
     cross product {a}×{(),(b),(b,c)}×{(),(d)} as GROUPING SETS."""
-    masked = _mask_parens_and_literals(sql)
+    masked = _scan(sql).flat()
     out = sql
     # masking blanks everything inside parens — scope is the top-level
     # statement; a subquery-level GROUP BY DISTINCT passes through
@@ -1629,7 +1696,7 @@ def _rewrite_group_by_distinct(sql: str) -> str:
     for m in reversed(list(_GBD_RE.finditer(masked))):
         stop = _GBD_STOP_RE.search(masked, m.end())
         end = stop.start() if stop else len(sql)
-        items = _split_top_level(out[m.end() : end])
+        items = _scan(out[m.end() : end]).items()
         if not items:
             continue
         per_item = [_expand_grouping_item(it) for it in items]
@@ -1675,7 +1742,7 @@ def _sole_from_alias(sql: str) -> str | None:
     """The statement's single FROM relation alias, or None when the FROM
     is absent, multi-relation (join/comma), or alias-less. Used to
     equate ``a`` with ``<alias>.a`` in grouping-set dedup keys."""
-    masked = _mask_parens_and_literals(sql)
+    masked = _scan(sql).flat()
     fm = re.search(r"\bFROM\b", masked, re.IGNORECASE)
     if fm is None:
         return None
@@ -1881,15 +1948,10 @@ def _widen_array_decimal_literals(sql: str) -> str:
     # array(...) <op> array(...) literal comparisons
     pos = 0
     while True:
-        mask = _literal_mask(sql)
-        m = None
-        for cand in _WADL_CMP_RE.finditer(sql, pos):
-            if not mask[cand.start()]:
-                m = cand
-                break
+        m = _find_outside(_WADL_CMP_RE, sql, pos)
         if m is None:
             return sql
-        a_end = _scan_matching_paren(sql, m.end())
+        a_end = _scan(sql).close(m.end())
         om = re.match(r"\s*(!=|<>|<=|>=|=|<|>)\s*", sql[a_end:])
         if not om:
             pos = m.end()
@@ -1898,7 +1960,7 @@ def _widen_array_decimal_literals(sql: str) -> str:
         if not bm:
             pos = m.end()
             continue
-        b_end = _scan_matching_paren(sql, bm.end())
+        b_end = _scan(sql).close(bm.end())
         a_txt, b_txt = sql[m.start() : a_end], sql[a_end + om.end() : b_end]
         new = widen([a_txt, b_txt])
         if new is None:
@@ -1921,7 +1983,7 @@ def _lcd_depth(e: str, env: dict) -> int | None:
     """Array-nesting depth of a literal-ish expression under a lambda
     environment (var → depth). None = unknown."""
     e = e.strip()
-    while e.startswith("(") and _scan_matching_paren(e, 1) == len(e):
+    while e.startswith("(") and _scan(e).close(1) == len(e):
         e = e[1:-1].strip()
     if not e:
         return None
@@ -1932,7 +1994,7 @@ def _lcd_depth(e: str, env: dict) -> int | None:
     m = re.match(r"(?is)^array\s*[\[(]", e)
     if m:
         close = (
-            _scan_matching_paren(e, m.end())
+            _scan(e).close(m.end())
             if e[m.end() - 1] == "("
             else None
         )
@@ -1940,15 +2002,15 @@ def _lcd_depth(e: str, env: dict) -> int | None:
         if not inner.strip():
             return 1
         depths = [
-            _lcd_depth(x, env) for x in _split_top_level(inner)
+            _lcd_depth(x, env) for x in _scan(inner).items()
         ]
         if any(d is None for d in depths):
             return None
         return 1 + max(depths)
     fm = re.match(r"^([A-Za-z_]\w*)\s*\(", e)
-    if fm and _scan_matching_paren(e, fm.end()) == len(e):
+    if fm and _scan(e).close(fm.end()) == len(e):
         fn = fm.group(1).lower()
-        args = _split_top_level(e[fm.end() : -1])
+        args = _scan(e[fm.end() : -1]).items()
         if fn == "transform" and len(args) == 2:
             lm = _LCD_LAMBDA_RE.match(args[1].strip())
             src_d = _lcd_depth(args[0], env)
@@ -2006,21 +2068,10 @@ def _lcd_fix_body(body: str, env: dict) -> str:
 
     body = _map_fn_args(body, "concat", concat_fix)
     # top-level || chain
-    parts, mask, depth, start = [], _literal_mask(body), 0, 0
-    k = 0
-    while k < len(body) - 1:
-        c = body[k]
-        if not mask[k]:
-            if c in "([":
-                depth += 1
-            elif c in ")]":
-                depth -= 1
-            elif depth == 0 and c == "|" and body[k + 1] == "|":
-                parts.append(body[start:k])
-                start = k + 2
-                k += 2
-                continue
-        k += 1
+    parts, start = [], 0
+    for m in _scan(body).top_matches(_CONCAT_OP_RE, "(["):
+        parts.append(body[start : m.start()])
+        start = m.end()
     if parts:
         parts.append(body[start:])
         fixed = fix_items(parts)
@@ -2058,10 +2109,10 @@ def _rewrite_lambda_concat_depths(sql: str) -> str:
             mm = re.match(r"(?is)^map\s*\(", src)
             if not mm or not v2:
                 return None
-            close = _scan_matching_paren(src, mm.end())
+            close = _scan(src).close(mm.end())
             if close != len(src):
                 return None
-            margs = _split_top_level(src[mm.end() : close - 1])
+            margs = _scan(src[mm.end() : close - 1]).items()
             if len(margs) != 2:
                 return None
             dk, dv = _lcd_depth(margs[0], {}), _lcd_depth(margs[1], {})
@@ -2126,7 +2177,7 @@ def _rewrite_reduce_typing(sql: str) -> str:
         )
         if m:
             fields = set()
-            for part in _split_top_level(m.group(1)):
+            for part in _scan(m.group(1)).items():
                 fm = _INT_FAMILY_RE.match(part)
                 if fm:
                     fields.add(fm.group(1).lower())
@@ -2206,7 +2257,7 @@ def _rewrite_try_generic(sql: str) -> str:
         # column-division pre-rewrite parenthesizes its DIV output)
         while (
             e.startswith("(")
-            and _scan_matching_paren(e, 1) == len(e.rstrip())
+            and _scan(e).close(1) == len(e.rstrip())
         ):
             e = e[1 : e.rstrip().rindex(")")].strip()
         # any CAST under the TRY scope may fail and be swallowed
@@ -2222,7 +2273,7 @@ def _rewrite_try_generic(sql: str) -> str:
             lowered_case = _lower_try_case(e)
             return f"({lowered_case if lowered_case is not None else e})"
         cmps = list(re.finditer(
-            r"!=|<>|<=|>=|=|<|>", _mask_parens_and_literals(e)
+            r"!=|<>|<=|>=|=|<|>", _scan(e).flat()
         ))
         if cmps:
             # a SINGLE top-level comparison: the only error sources TRY
@@ -2244,13 +2295,11 @@ def _rewrite_try_generic(sql: str) -> str:
                     # the integral-division pre-rewrite emits (-(7 DIV b))
                     while (
                         s.startswith("(")
-                        and _scan_matching_paren(s, 1) == len(s.rstrip())
+                        and _scan(s).close(1) == len(s.rstrip())
                     ):
                         s = s[1:s.rstrip().rindex(")")].strip()
                     mu = re.match(r"^([-+])\s*\(", s)
-                    if mu and _scan_matching_paren(
-                        s, mu.end()
-                    ) == len(s.rstrip()):
+                    if mu and _scan(s).close(mu.end()) == len(s.rstrip()):
                         inner = _try_side(
                             s[mu.end():s.rstrip().rindex(")")].strip()
                         )
@@ -2266,7 +2315,7 @@ def _rewrite_try_generic(sql: str) -> str:
         # inner expression is itself try-lowered first. (A DOUBLE inner
         # equal to -2^63 would false-NULL — integral-typed sites only.)
         mm = re.match(r"^abs\s*\(", e, re.IGNORECASE)
-        if mm and _scan_matching_paren(e, mm.end()) == len(e):
+        if mm and _scan(e).close(mm.end()) == len(e):
             x = e[mm.end():-1].strip()
             xl = _lower_try_arith(x) or x
             return (f"(CASE WHEN ({xl}) = BIGINT '-9223372036854775808'"
@@ -2277,9 +2326,9 @@ def _rewrite_try_generic(sql: str) -> str:
         # generic pass-through below would let the runtime error escape.
         mm = re.match(r"^map(?:_from_arrays)?\s*\(", e, re.IGNORECASE)
         if mm:
-            close = _scan_matching_paren(e, mm.end())
+            close = _scan(e).close(mm.end())
             if close == len(e):
-                args = _split_top_level(e[mm.end() : close - 1])
+                args = _scan(e[mm.end() : close - 1]).items()
                 if len(args) == 2:
                     ks, vs = args[0].strip(), args[1].strip()
                     return (
@@ -2308,7 +2357,7 @@ def _rewrite_try_generic(sql: str) -> str:
         # json_parse + TRY → NULL on malformed text)
         mm = re.match(r"^json_parse\s*\(", e, re.IGNORECASE)
         if mm:
-            close = _scan_matching_paren(e, mm.end())
+            close = _scan(e).close(mm.end())
             if close == len(e):
                 x = e[mm.end() : close - 1].strip()
                 # the canonicalizer returns NULL on malformed text —
@@ -2330,25 +2379,16 @@ def _top_level_binops(e: str) -> list:
     """Positions of top-level binary arithmetic operators in ``e``
     (unary +/- signs excluded; includes the engine's lowered integral
     ``DIV``), as (index, token) pairs in order."""
-    pos, depth, in_str = [], 0, False
+    sc, pos = _scan(e), []
     for k, c in enumerate(e):
-        if in_str:
-            in_str = c != "'"
-        elif c == "'":
-            in_str = True
-        elif c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif depth == 0 and c in _TRY_OPS:
+        if c in _TRY_OPS and sc.top(k, "(["):
             j = k - 1
             while j >= 0 and e[j].isspace():
                 j -= 1
             if c in "+-" and (j < 0 or e[j] in "(,+-*/%"):
                 continue  # unary sign
             pos.append((k, c))
-    mask = _mask_parens_and_literals(e)
-    for m in re.finditer(r"\bDIV\b", mask):
+    for m in re.finditer(r"\bDIV\b", sc.flat()):
         pos.append((m.start(), "DIV"))
     pos.sort()
     return pos
@@ -2361,7 +2401,7 @@ def _lower_try_arith(e: str):
     try_add(try_multiply(a, b), c), not try_multiply(a, b+c)). Returns
     None when no top-level arithmetic operator exists."""
     e = e.strip()
-    while e.startswith("(") and _scan_matching_paren(e, 1) == len(e.rstrip()):
+    while e.startswith("(") and _scan(e).close(1) == len(e.rstrip()):
         e = e[1 : e.rstrip().rindex(")")].strip()
     # a top-level predicate keyword means +/- tokens may be unary signs
     # after a keyword (ELSE -8) or live inside an arm/operand (THEN 1+2,
@@ -2373,7 +2413,7 @@ def _lower_try_arith(e: str):
     # escapes the TRY as an ANSI error (fuzz find, seed 7 #12). Mask the
     # CASE spans, refuse only on keywords outside them, and split only
     # at operators outside them.
-    masked = _mask_parens_and_literals(e)
+    masked = _scan(e).flat()
     spans, stack = [], []
     for mkw in re.finditer(r"\b(CASE|END)\b", masked, re.IGNORECASE):
         if mkw.group(1).upper() == "CASE":
@@ -2446,7 +2486,7 @@ def _case_result_arm_spans(e: str):
     arms in ``e`` (keyword scan with CASE-nesting depth — nested CASE
     inside an arm is not hidden by paren masking, so plain regex
     splitting would mis-pair keywords). None when unbalanced."""
-    masked = _mask_parens_and_literals(e)
+    masked = _scan(e).flat()
     depth, arms, cur = 0, [], None
     for m in _CASE_KW_RE.finditer(masked):
         kw = m.group(1).upper()
@@ -2496,9 +2536,9 @@ def _casts_to_try(e: str) -> str:
     def wrap(x: str) -> str:
         return lead + x + trail
 
-    if s.startswith("(") and _scan_matching_paren(s, 1) == len(s):
+    if s.startswith("(") and _scan(s).close(1) == len(s):
         return wrap("(" + _casts_to_try(s[1:-1]) + ")")
-    masked = _mask_parens_and_literals(s)
+    masked = _scan(s).flat()
     if "->" in masked:  # top-level lambda arrow: leave alone
         return e
     if re.match(r"(?is)^CASE\b", masked) and re.search(
@@ -2531,11 +2571,11 @@ def _casts_to_try(e: str) -> str:
             out.append(_casts_to_try(s[prev:]))
             return wrap("".join(out))
     fm = re.match(r"(\w+)\s*\(", s)
-    if fm and _scan_matching_paren(s, fm.end()) == len(s):
+    if fm and _scan(s).close(fm.end()) == len(s):
         fn = fm.group(1).lower()
         inner = s[fm.end() : -1]
         if fn in ("cast", "try_cast"):
-            am = re.search(r"(?is)\bAS\b", _mask_parens_and_literals(inner))
+            am = re.search(r"(?is)\bAS\b", _scan(inner).flat())
             if am is None:
                 return e
             return wrap(
@@ -2545,7 +2585,7 @@ def _casts_to_try(e: str) -> str:
                 + ")"
             )
         if fn in _TRY_STRICT_FNS:
-            args = _split_top_level(inner)
+            args = _scan(inner).items()
             return wrap(
                 fm.group(1)
                 + "("
@@ -2563,34 +2603,15 @@ def _lower_try_case(e: str):
     top-level arithmetic — every shim-emitted shape — stay verbatim.
     Returns the rewritten CASE text, or None when ``e`` is not a
     well-formed whole-body CASE."""
-    masked = _mask_parens_and_literals(e)
+    masked = _scan(e).flat()
     if not re.match(r"(?is)^\s*CASE\b", masked) or not re.search(
         r"(?is)\bEND\s*$", masked
     ):
         return None
-    # keyword scan with CASE-nesting depth: collect the OUTER case's
-    # THEN/ELSE arm spans (nested CASE inside an arm is not hidden by
-    # paren masking, so plain regex splitting would mis-pair keywords)
-    depth, arms, cur = 0, [], None
-    for m in _CASE_KW_RE.finditer(masked):
-        kw = m.group(1).upper()
-        if kw == "CASE":
-            # an arm containing a nested CASE spans it whole — the
-            # keyword-refusal in _lower_try_arith keeps it verbatim
-            depth += 1
-        elif kw == "END":
-            depth -= 1
-            if depth == 0 and cur is not None:
-                arms.append((cur, m.start()))
-                cur = None
-        elif depth == 1 and kw in ("THEN", "ELSE"):
-            if cur is not None:
-                arms.append((cur, m.start()))
-            cur = m.end()
-        elif depth == 1 and kw == "WHEN" and cur is not None:
-            arms.append((cur, m.start()))
-            cur = None
-    if depth != 0:
+    # an arm containing a nested CASE spans it whole — the
+    # keyword-refusal in _lower_try_arith keeps it verbatim
+    arms = _case_result_arm_spans(e)
+    if arms is None:
         return None
     out, prev, changed = [], 0, False
     for s, t in arms:
@@ -2612,27 +2633,10 @@ def _lower_try_case(e: str):
     return "".join(out) if changed else e
 
 
-def _mask_parens_and_literals(e: str) -> str:
-    """Copy of ``e`` with characters inside parens/brackets/strings
-    blanked — top-level-operator scans regex over the result."""
-    out, depth, in_str = [], 0, False
-    for c in e:
-        if in_str:
-            out.append(" ")
-            if c == "'":
-                in_str = False
-        elif c == "'":
-            out.append(" ")
-            in_str = True
-        elif c in "([":
-            depth += 1
-            out.append(" ")
-        elif c in ")]":
-            depth -= 1
-            out.append(" ")
-        else:
-            out.append(c if depth == 0 else " ")
-    return "".join(out)
+_VALUES_LIST_END_RE = re.compile(
+    r"(ORDER|LIMIT|UNION|EXCEPT|INTERSECT|WHERE|GROUP|HAVING|AS)\b",
+    re.IGNORECASE,
+)
 
 
 def _strip_values_row(sql: str) -> str:
@@ -2649,48 +2653,16 @@ def _strip_values_row(sql: str) -> str:
             return "".join(out)
         start = i + m.end()
         out.append(sql[i : start])
-        j, depth, in_str = start, 0, False
-        buf: list[str] = []
 
-        def flush(b):
-            s = "".join(b)
+        def flush(s):
             sm = re.match(r"^(\s*)ROW\s*\(", s, re.IGNORECASE)
-            if sm and _scan_matching_paren(s, sm.end()) == len(s.rstrip()):
+            if sm and _scan(s).close(sm.end()) == len(s.rstrip()):
                 return sm.group(1) + s[sm.end() - 1 :]
             return s
 
-        while j < len(sql):
-            c = sql[j]
-            if in_str:
-                buf.append(c)
-                if c == "'":
-                    in_str = False
-            elif c == "'":
-                buf.append(c)
-                in_str = True
-            elif c in "([":
-                depth += 1
-                buf.append(c)
-            elif c in ")]":
-                if depth == 0:
-                    break
-                depth -= 1
-                buf.append(c)
-            elif c == "," and depth == 0:
-                out.append(flush(buf))
-                out.append(",")
-                buf = []
-            elif depth == 0 and re.match(
-                r"(ORDER|LIMIT|UNION|EXCEPT|INTERSECT|WHERE|GROUP|HAVING|AS)\b",
-                sql[j:],
-                re.IGNORECASE,
-            ):
-                break
-            else:
-                buf.append(c)
-            j += 1
-        out.append(flush(buf))
-        i = j
+        spans = _scan(sql).run(start, _VALUES_LIST_END_RE)
+        out.append(",".join(flush(sql[a:b]) for a, b in spans))
+        i = spans[-1][1]
 
 
 def _rewrite_row_constructor(sql: str) -> str:
@@ -2801,7 +2773,7 @@ def _rewrite_map_equality(sql: str) -> str:
         if m2 is None:
             i = m.end()
             continue
-        j2 = _scan_matching_paren(sql, m2.end())
+        j2 = _scan(sql).close(m2.end())
         d = f"(({sql[m.end() : j2]}) IS NOT NULL)"
         rep = f"(NOT {d})" if m.group(1) else d
         sql = sql[: m.start()] + rep + sql[j2:]
@@ -2815,7 +2787,7 @@ def _rewrite_map_equality(sql: str) -> str:
         if mask[m.start()]:
             i = m.end()
             continue
-        j = _scan_matching_paren(sql, m.end())
+        j = _scan(sql).close(m.end())
         om = _MAP_CMP_OP_RE.match(sql, j)
         if om is None:
             i = m.end()
@@ -2824,7 +2796,7 @@ def _rewrite_map_equality(sql: str) -> str:
         m2 = _MAP_CALL_HEAD_RE.match(sql, om.end())
         nm2 = re.compile(r"NULL\b", re.IGNORECASE).match(sql, om.end())
         if m2 is not None:
-            j2 = _scan_matching_paren(sql, m2.end())
+            j2 = _scan(sql).close(m2.end())
             b = sql[om.end() : j2]
         elif nm2 is not None and op.startswith("IS"):
             j2, b = nm2.end(), None
@@ -2887,15 +2859,10 @@ def _rewrite_array_row_equality(sql: str) -> str:
     Spark's native = (same result, simpler plan)."""
     i = 0
     while True:
-        mask = _literal_mask(sql)
-        m = None
-        for cand in _ARRROW_CALL_HEAD_RE.finditer(sql, i):
-            if not mask[cand.start()]:
-                m = cand
-                break
+        m = _find_outside(_ARRROW_CALL_HEAD_RE, sql, i)
         if m is None:
             return sql
-        j = _scan_matching_paren(sql, m.end())
+        j = _scan(sql).close(m.end())
         om = _ARRROW_CMP_OP_RE.match(sql, j)
         if om is None:
             i = m.end()
@@ -2907,7 +2874,7 @@ def _rewrite_array_row_equality(sql: str) -> str:
         if m2 is None or norm.get(kind, kind) != norm.get(kind2, kind2):
             i = m.end()
             continue
-        j2 = _scan_matching_paren(sql, m2.end())
+        j2 = _scan(sql).close(m2.end())
         a, b = sql[m.start() : j], sql[om.end() : j2]
         # fire on a NULL element (three-valued semantics differ) or a
         # map-typed ROW field (Spark struct = rejects MapType members,
@@ -2923,8 +2890,8 @@ def _rewrite_array_row_equality(sql: str) -> str:
             continue
         op = om.group(1)
         if kind == "array":
-            aargs = _split_top_level(sql[m.end() : j - 1])
-            bargs = _split_top_level(sql[m2.end() : j2 - 1])
+            aargs = _scan(sql[m.end() : j - 1]).items()
+            bargs = _scan(sql[m2.end() : j2 - 1]).items()
             nested = bool(aargs and bargs) and all(
                 re.match(r"(?is)^\s*array\s*\(", x) or
                 re.fullmatch(r"(?is)\s*null\s*", x)
@@ -2932,8 +2899,8 @@ def _rewrite_array_row_equality(sql: str) -> str:
             )
             eq = _array_eq_expr(a, b, nested)
         else:
-            aargs = _split_top_level(sql[m.end() : j - 1])
-            bargs = _split_top_level(sql[m2.end() : j2 - 1])
+            aargs = _scan(sql[m.end() : j - 1]).items()
+            bargs = _scan(sql[m2.end() : j2 - 1]).items()
             if len(aargs) != len(bargs):
                 i = m.end()
                 continue
@@ -2982,15 +2949,11 @@ def _rewrite_in_values(sql: str) -> str:
     """Presto allows a bare VALUES body as the IN subquery
     (``x IN (VALUES 1, 2)``); Spark needs a SELECT wrapper."""
     while True:
-        mask = _literal_mask(sql)
-        m = next(
-            (c for c in _IN_VALUES_RE.finditer(sql) if not mask[c.start()]),
-            None,
-        )
+        m = _find_outside(_IN_VALUES_RE, sql)
         if m is None:
             return sql
         open_i = sql.index("(", m.end(1))
-        close_i = _scan_matching_paren(sql, open_i + 1)
+        close_i = _scan(sql).close(open_i + 1)
         inner = sql[open_i + 1 : close_i - 1]
         # single-column VALUES lists project col1 by name — a bare star
         # breaks inside the projection-context IN rewrite's CASE frame.
@@ -2998,8 +2961,8 @@ def _rewrite_in_values(sql: str) -> str:
         first = inner.strip()[len("VALUES") :].lstrip()
         proj = "col1"
         if first.startswith("("):
-            item_end = _scan_matching_paren(first, 1)
-            if len(_split_top_level(first[1 : item_end - 1])) > 1:
+            item_end = _scan(first).close(1)
+            if len(_scan(first[1 : item_end - 1]).items()) > 1:
                 proj = "*"
         sql = (
             sql[: open_i]
@@ -3186,7 +3149,7 @@ def _rewrite_string_compat(sql: str) -> str:
         if len(args) == 1:
             # SUBSTRING(e FROM a [FOR b]) grammar form — single "arg"
             # carrying top-level FROM/FOR keywords
-            masked = _mask_parens_and_literals(args[0])
+            masked = _scan(args[0]).flat()
             fm = re.search(r"\bFROM\b", masked, re.IGNORECASE)
             if not fm:
                 return None
@@ -3392,12 +3355,7 @@ def _fold_decimal_literal_negation(sql: str) -> str:
     alone: only operator/keyword/start contexts are unary."""
     pos = 0
     while True:
-        mask = _literal_mask(sql)
-        m = None
-        for cand in _NEG_DEC_LIT_RE.finditer(sql, pos):
-            if not mask[cand.start()]:
-                m = cand
-                break
+        m = _find_outside(_NEG_DEC_LIT_RE, sql, pos)
         if m is None:
             return sql
         before = sql[: m.start()].rstrip()
@@ -3442,12 +3400,7 @@ def _promote_int_literals_near_decimal(sql: str) -> str:
             pos = 0
             changed = False
             while True:
-                mask = _literal_mask(sql)
-                m = None
-                for cand in pat.finditer(sql, pos):
-                    if not mask[cand.start()]:
-                        m = cand
-                        break
+                m = _find_outside(pat, sql, pos)
                 if m is None:
                     break
                 rep = grp_rep(m)
@@ -3635,8 +3588,8 @@ def _fold_row_of_json_cast(sql: str) -> str:
         if not m:
             return sql
         row_open = sql.rindex("(", m.start(), m.end())
-        j1 = _scan_matching_paren(sql, row_open + 1)
-        args = _split_top_level(sql[row_open + 1 : j1 - 1])
+        j1 = _scan(sql).close(row_open + 1)
+        args = _scan(sql[row_open + 1 : j1 - 1]).items()
         lits = []
         for a in args:
             am = re.fullmatch(r"(?is)\s*JSON\s*'((?:[^']|'')*)'\s*", a)
@@ -4371,7 +4324,7 @@ def _rewrite_scalar_compat_misc(sql: str) -> str:
         if mask[m.start()]:
             i = m.end()
             continue
-        j = _scan_matching_paren(sql, m.end())
+        j = _scan(sql).close(m.end())
         fm = re.match(r"\.field(\d+)\b", sql[j:])
         if fm is None:
             i = m.end()
@@ -4394,7 +4347,6 @@ def _rewrite_scalar_compat_misc(sql: str) -> str:
     )
 
 
-
 def _rewrite_literal_backslashes(sql: str) -> str:
     """Presto string literals are VERBATIM (SqlBase.g4 STRING: the only
     escape is the doubled quote); Spark's parser processes C-style
@@ -4408,27 +4360,9 @@ def _rewrite_literal_backslashes(sql: str) -> str:
     Spark escape processing and must not be doubled."""
     if "\\" not in sql:
         return sql
-    out, i, n, in_str = [], 0, len(sql), False
-    while i < n:
-        c = sql[i]
-        if not in_str:
-            out.append(c)
-            if c == "'":
-                in_str = True
-            i += 1
-            continue
-        if c == "'":
-            if i + 1 < n and sql[i + 1] == "'":  # '' stays the escape
-                out.append("''")
-                i += 2
-                continue
-            in_str = False
-            out.append(c)
-            i += 1
-            continue
-        out.append("\\\\" if c == "\\" else c)
-        i += 1
-    return "".join(out)
+    return _splice(sql, [
+        (a, b, sql[a:b].replace("\\", "\\\\")) for a, b in _scan(sql).spans
+    ])
 
 
 # U+001E (record separator) — a char that never appears in patterns;
@@ -4496,10 +4430,10 @@ def _rewrite_timezone_offset_fns(sql: str) -> str:
                 return None  # 1-arg session-zone form: SQL UDF handles it
             arg = args[0].strip()
             open_i = arg.index("(")
-            if _scan_matching_paren(arg, open_i + 1) != len(arg):
+            if _scan(arg).close(open_i + 1) != len(arg):
                 return None  # at_timezone(...) is a sub-expression, not the arg
             inner = arg[open_i + 1 : -1]
-            parts = _split_top_level(inner)
+            parts = _scan(inner).items()
             if len(parts) != 2:
                 return None
             e, z = parts
@@ -4778,14 +4712,14 @@ def _tstz_unmark(e: str):
     """``__tstz(M, Z)`` (possibly parenthesized) → (head, M, Z), else
     None."""
     e = e.strip()
-    while e.startswith("(") and _scan_matching_paren(e, 1) == len(e):
+    while e.startswith("(") and _scan(e).close(1) == len(e):
         e = e[1:-1].strip()
     m = _TSTZ_MARK_RE.match(e)
     if not m:
         return None
-    if _scan_matching_paren(e, m.end()) != len(e):
+    if _scan(e).close(m.end()) != len(e):
         return None
-    parts = _split_top_level(e[m.end():-1])
+    parts = _scan(e[m.end():-1]).items()
     if len(parts) != 2:
         return None
     return m.group(1), parts[0].strip(), parts[1].strip()
@@ -4821,9 +4755,9 @@ def _tstz_primary_fwd(sql: str, i: int) -> int | None:
         return i + m.end()
     m = re.match(r"[A-Za-z_][\w.]*\s*\(", sql[i:])
     if m:
-        return _scan_matching_paren(sql, i + m.end())
+        return _scan(sql).close(i + m.end())
     if sql[i] == "(":
-        return _scan_matching_paren(sql, i + 1)
+        return _scan(sql).close(i + 1)
     return None
 
 
@@ -4848,21 +4782,8 @@ def _tstz_primary_bwd(sql: str, j: int) -> int | None:
             return hm.start(1)
         return None
     if sql[k] == ")":
-        depth, p = 1, k - 1
-        in_s = False
-        while p >= 0:
-            c = sql[p]
-            if c == "'":
-                in_s = not in_s
-            elif not in_s:
-                if c == ")":
-                    depth += 1
-                elif c == "(":
-                    depth -= 1
-                    if depth == 0:
-                        break
-            p -= 1
-        if depth != 0:
+        p = _scan(sql).open_of(k)
+        if p < 0:
             return None
         hm = re.search(r"[A-Za-z_][\w.]*\s*$", sql[:p])
         return hm.start() if hm else p
@@ -4992,9 +4913,9 @@ def _tstz_lower_once(
         m = _CAST_OPEN_RE.search(sql, i)
         if not m:
             break
-        j = _scan_matching_paren(sql, m.end())
+        j = _scan(sql).close(m.end())
         inner = sql[m.end():j - 1]
-        as_pos = _top_level_last_as(inner)
+        as_pos = _scan(inner).last_top(_AS_RE, "([")
         if as_pos is None:
             i = m.end()
             continue
@@ -5498,7 +5419,7 @@ def _tstz_to_millis_text(s: str) -> str:
         m = _TSTZ_MARK_RE.search(s)
         if not m:
             return s
-        j = _scan_matching_paren(s, m.end())
+        j = _scan(s).close(m.end())
         um = _tstz_unmark(s[m.start():j])
         if not um:
             return s
@@ -5519,7 +5440,7 @@ def _tstz_operators(sql: str, session_zone: str) -> str:
         m = _TSTZ_ARR_OPEN_RE.search(sql, i)
         if not m:
             break
-        a_end = _scan_matching_paren(sql, m.end())
+        a_end = _scan(sql).close(m.end())
         a_txt = sql[m.start():a_end]
         i = m.end()
         if "__tstz" not in a_txt and "__ttz" not in a_txt:
@@ -5531,7 +5452,7 @@ def _tstz_operators(sql: str, session_zone: str) -> str:
         bm = _TSTZ_ARR_OPEN_RE.match(sql, b_start)
         if not bm:
             continue
-        b_end = _scan_matching_paren(sql, bm.end())
+        b_end = _scan(sql).close(bm.end())
         rep = (
             _tstz_to_millis_text(a_txt)
             + om.group(0)
@@ -5567,7 +5488,7 @@ def _tstz_operators(sql: str, session_zone: str) -> str:
             _pos = m.start() + 1
             continue
         mm = _TSTZ_MARK_RE.match(sql, m.end())
-        mark_end = _scan_matching_paren(sql, mm.end())
+        mark_end = _scan(sql).close(mm.end())
         chain_body = chain[:-1].rstrip()  # drop the trailing '+'
         sql = (
             sql[:m.start()] + sql[m.end():mark_end] + " + " + chain_body
@@ -5579,7 +5500,7 @@ def _tstz_operators(sql: str, session_zone: str) -> str:
         changed = False
         for m in _TSTZ_MARK_RE.finditer(sql):
             start = m.start()
-            end = _scan_matching_paren(sql, m.end())
+            end = _scan(sql).close(m.end())
             um = _tstz_unmark(sql[start:end])
             if not um:
                 continue
@@ -5734,8 +5655,8 @@ def _expand_tstz_markers(sql: str) -> str:
         if not m:
             out.append(sql)
             return "".join(out)
-        j = _scan_matching_paren(sql, m.end())
-        parts = _split_top_level(sql[m.end():j - 1])
+        j = _scan(sql).close(m.end())
+        parts = _scan(sql[m.end():j - 1]).items()
         out.append(sql[:m.start()])
         if len(parts) == 2:
             out.append(
@@ -5754,7 +5675,7 @@ _FILTER_TAIL_RE = re.compile(r"\s*FILTER\s*\(", re.IGNORECASE)
 def _parse_sort_items(txt: str) -> list[tuple[str, bool, bool | None]]:
     """ORDER BY item list → [(expr, desc, nulls_first|None)]."""
     keys = []
-    for part in _split_top_level(txt):
+    for part in _scan(txt).items():
         part = part.strip()
         nulls_first = None
         nm = re.search(r"\s+NULLS\s+(FIRST|LAST)\s*$", part, re.IGNORECASE)
@@ -5788,25 +5709,17 @@ def _rewrite_orderless_agg_orderby(sql: str) -> str:
     own ordered rewrites."""
     pos = 0
     while True:
-        mask = _literal_mask(sql)
-        m = next(
-            (
-                c
-                for c in _ORDERLESS_AGG_ORDERBY_RE.finditer(sql, pos)
-                if not mask[c.start()]
-            ),
-            None,
-        )
+        m = _find_outside(_ORDERLESS_AGG_ORDERBY_RE, sql, pos)
         if m is None:
             return sql
-        j = _scan_matching_paren(sql, m.end())
+        j = _scan(sql).close(m.end())
         arg = sql[m.end() : j - 1]
         # anchor on the ORDER keyword itself — the mask blanks paren
         # interiors to spaces, so a leading-\s+ pattern would match from
         # the start of a masked region and truncate the argument
         # (``sum(cast(x AS double) ORDER BY x)`` -> ``sum(cast)``)
         om = re.search(
-            r"\bORDER\s+BY\s", _mask_parens_and_literals(arg), re.IGNORECASE
+            r"\bORDER\s+BY\s", _scan(arg).flat(), re.IGNORECASE
         )
         if om is None:
             pos = j
@@ -5846,17 +5759,13 @@ def _rewrite_array_agg_ordered(sql: str) -> str:
     the transform)."""
     pos = 0
     while True:
-        mask = _literal_mask(sql)
-        m = next(
-            (c for c in _ARRAY_AGG_RE.finditer(sql, pos) if not mask[c.start()]),
-            None,
-        )
+        m = _find_outside(_ARRAY_AGG_RE, sql, pos)
         if m is None:
             return sql
-        j = _scan_matching_paren(sql, m.end())
+        j = _scan(sql).close(m.end())
         arg = sql[m.end() : j - 1]
         om = re.search(r"\s+ORDER\s+BY\s+", arg, re.IGNORECASE)
-        if not om or len(_split_top_level(arg[: om.start()])) != 1:
+        if not om or len(_scan(arg[: om.start()]).items()) != 1:
             pos = m.end()
             continue
         e = arg[: om.start()].strip()
@@ -5879,7 +5788,7 @@ def _rewrite_array_agg_ordered(sql: str) -> str:
         filt = ""
         fm = _FILTER_TAIL_RE.match(sql, j)
         if fm:
-            fend = _scan_matching_paren(sql, fm.end())
+            fend = _scan(sql).close(fm.end())
             filt = " " + sql[j:fend].strip()
             end = fend
         # comparator sort for every form: a plain struct array_sort puts
@@ -5937,7 +5846,7 @@ def _expand_presto_aggregates(sql: str) -> str:
         val = a[1]
         om = re.search(
             r"\bORDER\s+BY\s+",  # \b not \s+ — mask blanks parens to spaces
-            _mask_parens_and_literals(val),
+            _scan(val).flat(),
             re.IGNORECASE,
         )
         if om:
@@ -6227,16 +6136,11 @@ def _rewrite_regexp_replace_lambda(sql: str) -> str:
     i = 0
     pat_re = re.compile(r"\bregexp_replace\s*\(", re.IGNORECASE)
     while True:
-        mask = _literal_mask(sql)
-        m = None
-        for cand in pat_re.finditer(sql, i):
-            if not mask[cand.start()]:
-                m = cand
-                break
+        m = _find_outside(pat_re, sql, i)
         if m is None:
             return sql
-        j = _scan_matching_paren(sql, m.end())
-        args = _split_top_level(sql[m.end() : j - 1])
+        j = _scan(sql).close(m.end())
+        args = _scan(sql[m.end() : j - 1]).items()
         if len(args) != 3 or "->" not in args[2]:
             i = m.end()
             continue
@@ -6399,7 +6303,8 @@ def _rewrite_regex_arg_defaults(sql: str) -> str:
 _ORDER_BY_RE = re.compile(r"\bORDER\s+BY\s+", re.IGNORECASE)
 # Words that terminate an ORDER BY item list at depth 0.
 _ORDER_CLAUSE_END = re.compile(
-    r"(LIMIT|OFFSET|FETCH|ROWS|RANGE|WINDOW|UNION|INTERSECT|EXCEPT|HAVING)\b",
+    r"(?<!\w)(LIMIT|OFFSET|FETCH|ROWS|RANGE|WINDOW|UNION|INTERSECT|EXCEPT"
+    r"|HAVING)\b",
     re.IGNORECASE,
 )
 
@@ -6413,51 +6318,15 @@ def _rewrite_order_by_nulls(sql: str) -> str:
     out: list[str] = []
     pos = 0
     while True:
-        mask = _literal_mask(sql)
-        m = None
-        for cand in _ORDER_BY_RE.finditer(sql, pos):
-            if not mask[cand.start()]:
-                m = cand
-                break
+        m = _find_outside(_ORDER_BY_RE, sql, pos)
         if m is None:
             out.append(sql[pos:])
             return "".join(out)
         out.append(sql[pos : m.end()])
-        # collect item spans until clause end / unbalanced ')' / EOF
-        j = m.end()
-        depth, in_str = 0, False
-        item_start = j
-        spans: list[tuple[int, int]] = []
-        while True:
-            if j >= len(sql):
-                spans.append((item_start, j))
-                break
-            c = sql[j]
-            if in_str:
-                in_str = c != "'"
-            elif c == "'":
-                in_str = True
-            elif c in "([":
-                depth += 1
-            elif c in ")]":
-                if depth == 0:
-                    spans.append((item_start, j))
-                    break
-                depth -= 1
-            elif depth == 0 and c == ",":
-                spans.append((item_start, j))
-                item_start = j + 1
-            elif (
-                depth == 0
-                and c.isalpha()
-                and not (sql[j - 1].isalnum() or sql[j - 1] == "_")
-                and _ORDER_CLAUSE_END.match(sql, j)
-            ):
-                spans.append((item_start, j))
-                break
-            j += 1
+        # item spans until clause end / unbalanced ')' / EOF
+        spans = _scan(sql).run(m.end(), _ORDER_CLAUSE_END)
         pieces = []
-        for k, (a, b) in enumerate(spans):
+        for a, b in spans:
             item = sql[a:b]
             stripped = item.rstrip()
             if stripped and not re.search(r"\bNULLS\s+(FIRST|LAST)\s*$",
@@ -6519,7 +6388,7 @@ def _integral_agg_spans(
     for m in _INT_AGG_CALL_RE.finditer(sql):
         if mask[m.start()]:
             continue
-        end = _scan_matching_paren(sql, m.end())
+        end = _scan(sql).close(m.end())
         fn = m.group(1).lower()
         if fn == "count":
             spans[m.start()] = end
@@ -6662,20 +6531,9 @@ _ARITH_OPS = "+-*/%"
 def _top_level_arith_parts(e: str) -> list[str]:
     """Split on top-level binary + - * / % (literal- and paren-aware);
     unary +/- (operator-or-start preceded) do not split."""
-    mask = _literal_mask(e)
-    parts, depth, start, prev = [], 0, 0, ""
-    i = 0
-    while i < len(e):
-        c = e[i]
-        if mask[i]:
-            prev = c
-            i += 1
-            continue
-        if c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif depth == 0 and c in _ARITH_OPS:
+    sc, parts, start, prev = _scan(e), [], 0, ""
+    for i, c in enumerate(e):
+        if c in _ARITH_OPS and sc.top(i, "(["):
             if c in "+-" and (not prev or prev in "(,+-*/%<>="):
                 pass  # unary sign
             elif c == "/" and (e[i - 1 : i] == "/" or e[i + 1 : i + 2] == "/"):
@@ -6685,7 +6543,6 @@ def _top_level_arith_parts(e: str) -> list[str]:
                 start = i + 1
         if not c.isspace():
             prev = c
-        i += 1
     parts.append(e[start:])
     return parts
 
@@ -6695,7 +6552,7 @@ def _provably_double(e: str, double_cols: frozenset) -> bool:
     if not e:
         return False
     while e.startswith("("):
-        close = _scan_matching_paren(e, 1)
+        close = _scan(e).close(1)
         if close == len(e):
             e = e[1:-1].strip()
             if not e:
@@ -6710,13 +6567,13 @@ def _provably_double(e: str, double_cols: frozenset) -> bool:
     if e[0] in "+-":
         return _provably_double(e[1:], double_cols)
     m = re.match(r"([A-Za-z_]\w*)\s*\(", e)
-    if m and _scan_matching_paren(e, m.end()) == len(e):
+    if m and _scan(e).close(m.end()) == len(e):
         fn = m.group(1).lower()
         inner = e[m.end() : -1]
         if fn in _ALWAYS_DOUBLE_FNS:
             return True
         if fn in _DOUBLE_PRESERVING_FNS:
-            args = _split_top_level(inner)
+            args = _scan(inner).items()
             return bool(args) and any(
                 _provably_double(a, double_cols) for a in args
             )
@@ -6736,22 +6593,6 @@ def _provably_double(e: str, double_cols: frozenset) -> bool:
         return True
     # exponent-form literal is DOUBLE in Presto (plain 1.5 is DECIMAL)
     return bool(re.fullmatch(r"\d+(?:\.\d+)?[eE][+-]?\d+", e))
-
-
-def _top_level_last_as(inner: str) -> int | None:
-    mask = _literal_mask(inner)
-    depth, pos = 0, None
-    for m in re.finditer(r"\(|\)|\[|\]|\bAS\b", inner, re.IGNORECASE):
-        if mask[m.start()]:
-            continue
-        tok = m.group(0)
-        if tok in "([":
-            depth += 1
-        elif tok in ")]":
-            depth -= 1
-        elif depth == 0:
-            pos = m.start()
-    return pos
 
 
 _SIMPLE_DIV_RE = re.compile(
@@ -6832,9 +6673,9 @@ def rewrite_double_bigint_cast(sql: str, double_cols: frozenset) -> str:
     for m in _CAST_CALL_RE.finditer(sql):
         if mask[m.start()] or m.start() < last_end:
             continue
-        end = _scan_matching_paren(sql, m.end())
+        end = _scan(sql).close(m.end())
         inner = sql[m.end() : end - 1]
-        as_pos = _top_level_last_as(inner)
+        as_pos = _scan(inner).last_top(_AS_RE, "([")
         if as_pos is None:
             continue
         if inner[as_pos + 2 :].strip().upper() != "BIGINT":
@@ -6866,7 +6707,7 @@ def _int_literal_map_values(e: str) -> bool:
     )
     if not m:
         return False
-    args = _split_top_level(m.group(1))
+    args = _scan(m.group(1)).items()
     if len(args) != 2:
         return False
     vm = re.fullmatch(r"(?is)ARRAY\s*[\[(](.*)[\])]", args[1].strip())
@@ -6874,7 +6715,7 @@ def _int_literal_map_values(e: str) -> bool:
         return False
     return all(
         re.fullmatch(r"\s*-?\d+\s*", x)
-        for x in _split_top_level(vm.group(1))
+        for x in _scan(vm.group(1)).items()
     )
 
 
@@ -6887,7 +6728,7 @@ def _all_double_array_literal(e: str) -> bool:
     return all(
         _provably_double(a, frozenset())
         or re.fullmatch(r"(?is)\s*NULL\s*", a)
-        for a in _split_top_level(m.group(1))
+        for a in _scan(m.group(1)).items()
     )
 
 
@@ -6898,16 +6739,11 @@ def rewrite_lambda_double_casts(sql: str) -> str:
     (MathFunctions doubleToBigint), not truncate."""
     i = 0
     while True:
-        mask = _literal_mask(sql)
-        m = None
-        for cand in _HOF_DBL_HEAD_RE.finditer(sql, i):
-            if not mask[cand.start()]:
-                m = cand
-                break
+        m = _find_outside(_HOF_DBL_HEAD_RE, sql, i)
         if m is None:
             return sql
-        j = _scan_matching_paren(sql, m.end())
-        args = _split_top_level(sql[m.end() : j - 1])
+        j = _scan(sql).close(m.end())
+        args = _scan(sql[m.end() : j - 1]).items()
         fn = m.group(1).lower()
         if fn == "map_zip_with":
             # int-literal map values → integral division inside the
@@ -7016,7 +6852,7 @@ def infer_values_int_cols(sql: str) -> frozenset:
             j -= 1
         if j < 0 or sql[j] != "(":
             continue
-        close = _scan_matching_paren(sql, j + 1)
+        close = _scan(sql).close(j + 1)
         body = sql[m.end() : close - 1]
         am = re.match(
             r"\s*(?:AS\s+)?\w+\s*\(([^()]*)\)", sql[close:], re.IGNORECASE
@@ -7026,12 +6862,12 @@ def infer_values_int_cols(sql: str) -> frozenset:
         names = [c.strip().lower() for c in am.group(1).split(",")]
         col_int: list[bool | None] = [None] * len(names)
         ok = True
-        for item in _split_top_level(body):
+        for item in _scan(body).items():
             item = re.sub(r"^\s*ROW\s*\(", "(", item, flags=re.IGNORECASE)
-            if item.startswith("(") and _scan_matching_paren(item, 1) == len(
+            if item.startswith("(") and _scan(item).close(1) == len(
                 item
             ):
-                cells = _split_top_level(item[1:-1])
+                cells = _scan(item[1:-1]).items()
             else:
                 cells = [item]
             if len(cells) != len(names):
@@ -7281,19 +7117,8 @@ def _fold_ts_literals_in_varchar_container_casts(sql: str) -> str:
         if len(a) != 1:
             return None
         e = a[0]
-        depth, in_str, as_pos = 0, False, -1
-        for k, c in enumerate(e):
-            if in_str:
-                in_str = c != "'"
-            elif c == "'":
-                in_str = True
-            elif c in "([<":
-                depth += 1
-            elif c in ")]>":
-                depth -= 1
-            elif depth == 0 and e[k : k + 4].upper() == " AS ":
-                as_pos = k
-        if as_pos < 0:
+        as_pos = _scan(e).last_top(_SPACED_AS_RE, "([<")
+        if as_pos is None:
             return None
         operand, target = e[:as_pos], e[as_pos + 4 :]
         t = " ".join(target.upper().split())
@@ -7395,30 +7220,9 @@ _IVL_IDENT_RE = re.compile(
 )
 
 
-def _split_top_level_on(text: str, seps: str) -> list[str]:
-    """Split on top-level occurrences of any char in ``seps`` (outside
-    parens/brackets and single-quoted strings)."""
-    parts, buf, depth, in_str = [], [], 0, False
-    for c in text:
-        if in_str:
-            buf.append(c)
-            in_str = c != "'"
-        elif c == "'":
-            buf.append(c)
-            in_str = True
-        elif c in "([":
-            depth += 1
-            buf.append(c)
-        elif c in ")]":
-            depth -= 1
-            buf.append(c)
-        elif depth == 0 and c in seps:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(c)
-    parts.append("".join(buf))
-    return parts
+_IVL_VALUES_END_RE = re.compile(
+    r"(ORDER|LIMIT|UNION|EXCEPT|INTERSECT|WHERE)\b", re.IGNORECASE
+)
 
 
 def _interval_values_column_pools(sql: str) -> dict[str, str]:
@@ -7445,32 +7249,14 @@ def _interval_values_column_pools(sql: str) -> dict[str, str]:
     def scan_values(start: int) -> list[str] | None:
         """From just past the VALUES keyword: per-column family over all
         rows, or None when any position mixes families/non-intervals."""
-        depth, i, in_str = 0, start, False
-        while i < len(sql):
-            c = sql[i]
-            if in_str:
-                in_str = c != "'"
-            elif c == "'":
-                in_str = True
-            elif c in "([":
-                depth += 1
-            elif c in ")]":
-                if depth == 0:
-                    break
-                depth -= 1
-            elif depth == 0 and re.match(
-                r"(ORDER|LIMIT|UNION|EXCEPT|INTERSECT|WHERE)\b",
-                sql[i:], re.IGNORECASE,
-            ):
-                break
-            i += 1
-        rows = _split_top_level_on(sql[start:i], ",")
+        spans = _scan(sql).run(start, _IVL_VALUES_END_RE)
+        rows = [sql[a:b] for a, b in spans]
         fams: list[str] = []
         for row in rows:
             r = row.strip()
             if r.startswith("(") and r.endswith(")"):
                 r = r[1:-1]
-            items = _split_top_level_on(r, ",")
+            items = _scan(r).split(",")
             for ci, item in enumerate(items):
                 f = classify_item(item)
                 while len(fams) <= ci:
@@ -7506,18 +7292,7 @@ def _interval_values_column_pools(sql: str) -> dict[str, str]:
         bind(m.group(1), m.group(2), scan_values(m.end()))
     for m in _IVL_VALUES_ALIAS_INLINE_RE.finditer(sql):
         # (VALUES ...) [AS] t(a, b) — find the close paren, then alias
-        depth, i, in_str = 1, m.end(), False
-        while depth and i < len(sql):
-            c = sql[i]
-            if in_str:
-                in_str = c != "'"
-            elif c == "'":
-                in_str = True
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            i += 1
+        i = _scan(sql).close(m.end())
         am = re.match(
             r"\s*(?:AS\s+)?(\w+)\s*\(([^()]*)\)", sql[i:], re.IGNORECASE
         )
@@ -7535,20 +7310,8 @@ def _provably_interval(e: str, pools: dict[str, str]) -> str | None:
     s = e.strip()
     while s.startswith("(") and s.endswith(")"):
         inner = s[1:-1]
-        if _split_top_level_on(inner, ",") != [inner]:
+        if _scan(inner).split(",") != [inner] or _scan(s).close(1) < len(s):
             break  # not a simple paren wrap
-        depth = 0
-        ok = True
-        for c in inner:
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth < 0:
-                    ok = False
-                    break
-        if not ok:
-            break
         s = inner.strip()
     m = _IVL_ONLY_LIT_RE.match(s)
     if m and s.upper().startswith("INTERVAL"):
@@ -7569,7 +7332,7 @@ def _provably_interval(e: str, pools: dict[str, str]) -> str | None:
         # analyzes, so ONE proven argument pins the family
         fams = {
             _provably_interval(a, pools)
-            for a in _split_top_level_on(m.group(1), ",")
+            for a in _scan(m.group(1)).split(",")
         } - {None}
         if len(fams) == 1:
             return fams.pop()
@@ -7577,7 +7340,7 @@ def _provably_interval(e: str, pools: dict[str, str]) -> str | None:
     if s.startswith("-") or s.startswith("+"):
         return _provably_interval(s[1:], pools)
     parts = [
-        p for p in _split_top_level_on(s, "+-") if p.strip()
+        p for p in _scan(s).split("+-") if p.strip()
     ]
     if len(parts) > 1:
         fams_list = [_provably_interval(p, pools) for p in parts]
@@ -7660,18 +7423,7 @@ def _rewrite_interval_varchar_casts(sql: str) -> str:
     for m in re.finditer(r"\bCAST\s*\(", sql, re.IGNORECASE):
         if m.start() < pos or mask[m.start()]:
             continue
-        depth, i, in_str = 1, m.end(), False
-        while depth and i < len(sql):
-            c = sql[i]
-            if in_str:
-                in_str = c != "'"
-            elif c == "'":
-                in_str = True
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            i += 1
+        i = _scan(sql).close(m.end())
         inner = sql[m.end() : i - 1]
         am = re.search(
             r"\s+AS\s+VARCHAR(?:\s*\(\s*\d+\s*\))?\s*\Z",
@@ -7681,29 +7433,14 @@ def _rewrite_interval_varchar_casts(sql: str) -> str:
             continue
         expr = inner[: am.start()]
         # the AS found must be top-level, not inside the operand
-        if _split_top_level_on(inner, ",") != [inner]:
+        if _scan(inner).split(",") != [inner]:
             continue
         if re.search(
             r"\s+AS\s+", expr, re.IGNORECASE
-        ) and _split_top_level_on(expr, ",") == [expr]:
+        ) and _scan(expr).split(",") == [expr]:
             # e.g. CAST(CAST(x AS Y) AS VARCHAR): recheck that our AS is
             # the outermost by balance — expr must be paren-balanced
-            depth2 = 0
-            bal = True
-            q = False
-            for c in expr:
-                if q:
-                    q = c != "'"
-                elif c == "'":
-                    q = True
-                elif c == "(":
-                    depth2 += 1
-                elif c == ")":
-                    depth2 -= 1
-                    if depth2 < 0:
-                        bal = False
-                        break
-            if not bal or depth2 != 0:
+            if not _scan(expr).balanced():
                 continue
         fam = _provably_interval(expr, pools)
         if fam is None:
@@ -7780,9 +7517,9 @@ def _rewrite_time_casts(sql: str) -> str:
         m = _CAST_OPEN_RE.search(sql, i)
         if not m:
             return sql
-        j = _scan_matching_paren(sql, m.end())
+        j = _scan(sql).close(m.end())
         inner = sql[m.end() : j - 1]
-        as_pos = _top_level_last_as(inner)
+        as_pos = _scan(inner).last_top(_AS_RE, "([")
         if as_pos is None:
             i = m.end()
             continue
@@ -7807,8 +7544,10 @@ _SELECT_KW_RE = re.compile(r"\bSELECT\b", re.IGNORECASE)
 _SETOP_DISTINCT_RE = re.compile(
     r"\b(INTERSECT|EXCEPT)\b(?!\s+ALL\b)", re.IGNORECASE
 )
-_SELECT_LIST_END_WORDS = frozenset(
-    "FROM WHERE GROUP ORDER HAVING UNION INTERSECT EXCEPT LIMIT WINDOW".split()
+_SELECT_LIST_END_RE = re.compile(
+    r"(?<![A-Za-z_])(?:FROM|WHERE|GROUP|ORDER|HAVING|UNION|INTERSECT|EXCEPT"
+    r"|LIMIT|WINDOW)(?![A-Za-z_])",
+    re.IGNORECASE,
 )
 
 
@@ -7835,28 +7574,8 @@ def _rewrite_setop_void_nulls(sql: str) -> str:
     ]
     for m in reversed(selects):
         start = m.end()
-        depth, i, in_str, end = 0, start, False, len(sql)
-        while i < len(sql):
-            c = sql[i]
-            if in_str:
-                in_str = c != "'"
-            elif c == "'":
-                in_str = True
-            elif c in "([":
-                depth += 1
-            elif c in ")]":
-                if depth == 0:
-                    end = i
-                    break
-                depth -= 1
-            elif depth == 0 and (c.isalpha() or c == "_"):
-                w = re.match(r"[A-Za-z_]+", sql[i:]).group(0)
-                if w.upper() in _SELECT_LIST_END_WORDS:
-                    end = i
-                    break
-                i += len(w) - 1
-            i += 1
-        items = _split_top_level(sql[start:end])
+        end = _scan(sql).run(start, _SELECT_LIST_END_RE)[-1][1]
+        items = _scan(sql[start:end]).items()
         new_items, changed = [], False
         for it in items:
             mm = re.fullmatch(
@@ -7916,9 +7635,9 @@ def _rewrite_real_decimal_cmp(sql: str) -> str:
         m = _CAST_OPEN_RE.search(sql, i)
         if not m:
             break
-        j = _scan_matching_paren(sql, m.end())
+        j = _scan(sql).close(m.end())
         inner = sql[m.end() : j - 1]
-        as_pos = _top_level_last_as(inner)
+        as_pos = _scan(inner).last_top(_AS_RE, "([")
         if as_pos is not None:
             casts.append((m.start(), j, inner[as_pos + 2 :].strip().upper()))
         i = m.end()
@@ -7970,9 +7689,9 @@ def _ip_alias_scan(sql: str, seed=None) -> set[str]:
                 grew = True
                 continue
             em = _CAST_OPEN_RE.match(expr)
-            if em and _scan_matching_paren(expr, em.end()) == len(expr):
+            if em and _scan(expr).close(em.end()) == len(expr):
                 inner = expr[em.end() : -1]
-                ap = _top_level_last_as(inner)
+                ap = _scan(inner).last_top(_AS_RE, "([")
                 if (
                     ap is not None
                     and inner[ap + 2 :].strip().upper() == "IPADDRESS"
@@ -8049,9 +7768,9 @@ def _rewrite_ipaddress(sql: str, ip_seed=None) -> str:
         m = _CAST_OPEN_RE.search(sql, i)
         if not m:
             break
-        j = _scan_matching_paren(sql, m.end())
+        j = _scan(sql).close(m.end())
         inner = sql[m.end() : j - 1]
-        as_pos = _top_level_last_as(inner)
+        as_pos = _scan(inner).last_top(_AS_RE, "([")
         if as_pos is None or inner[as_pos + 2 :].strip().upper() != "IPADDRESS":
             i = m.end()
             continue
@@ -8100,9 +7819,9 @@ def _rewrite_ipaddress(sql: str, ip_seed=None) -> str:
         m = _CAST_OPEN_RE.search(sql, i)
         if not m:
             return sql
-        j = _scan_matching_paren(sql, m.end())
+        j = _scan(sql).close(m.end())
         inner = sql[m.end() : j - 1]
-        as_pos = _top_level_last_as(inner)
+        as_pos = _scan(inner).last_top(_AS_RE, "([")
         if as_pos is None:
             i = m.end()
             continue
@@ -8139,54 +7858,13 @@ _QUANT_AGG = {
 }
 
 
-def _scan_matching_paren(sql: str, start: int) -> int:
-    """Index just past the ``)`` matching the ``(`` at start-1 (literal-aware)."""
-    depth, j, in_str = 1, start, False
-    while j < len(sql) and depth:
-        c = sql[j]
-        if in_str:
-            in_str = c != "'"
-        elif c == "'":
-            in_str = True
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        j += 1
-    return j
-
-
-def _top_level_from(s: str) -> int:
-    """Position of the subquery's own FROM (depth 0, outside literals)."""
-    depth, in_str, i = 0, False, 0
-    while i < len(s):
-        c = s[i]
-        if in_str:
-            in_str = c != "'"
-        elif c == "'":
-            in_str = True
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and s[i : i + 4].upper() == "FROM"
-            and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_"))
-            and (i + 4 >= len(s) or not (s[i + 4].isalnum() or s[i + 4] == "_"))
-        ):
-            return i
-        i += 1
-    return -1
-
-
 def _split_subquery(inner: str) -> tuple[str, str] | None:
     """Split ``SELECT <proj> <rest>`` into (proj, rest incl. FROM); None if
     the shape is unsupported (multi-column or DISTINCT projection)."""
     if inner[:6].upper() != "SELECT":
         return None
     body = inner[6:]
-    f = _top_level_from(body)
+    f = next((m.start() for m in _scan(body).top_matches(_FROM_RE)), -1)
     if f < 0:
         # FROM-less subquery: the projection ends at the first depth-0
         # clause keyword (``SELECT 1 WHERE FALSE``) or end of text
@@ -8197,14 +7875,8 @@ def _split_subquery(inner: str) -> tuple[str, str] | None:
         )
         f = cm.start() if cm else len(body)
     proj = body[:f].strip()
-    depth = 0
-    for c in proj:
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "," and depth == 0:
-            return None
+    if len(_scan(proj).split(",", "(")) > 1:
+        return None
     if not proj or proj.upper().startswith("DISTINCT"):
         return None
     return proj, body[f:]
@@ -8234,28 +7906,12 @@ def _projection_zones(sql: str) -> list[tuple[int, int]]:
         if mask[m.start()]:
             continue
         body = sql[m.end():]
-        f = _top_level_from(body)
+        f = next((m.start() for m in _scan(body).top_matches(_FROM_RE)), -1)
         if f < 0:
             # FROM-less SELECT (e.g. a CTE body ``SELECT 1 WHERE FALSE``):
             # the projection ends at the first depth-0 clause keyword or
             # when the enclosing paren closes — NOT at end-of-string
-            f = len(body)
-            depth, in_str = 0, False
-            for k, c in enumerate(body):
-                if in_str:
-                    in_str = c != "'"
-                elif c == "'":
-                    in_str = True
-                elif c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                    if depth < 0:
-                        f = k
-                        break
-                elif depth == 0 and clause_re.match(body, k):
-                    f = k
-                    break
+            f = _scan(body).run(0, clause_re, "(")[-1][1]
         zones.append((m.end(), m.end() + f))
     return zones
 
@@ -8288,22 +7944,15 @@ def _rewrite_group_by_in_subquery(sql: str) -> str:
         return sql
     if not re.search(r"\(\s*SELECT\b", sql, re.IGNORECASE):
         return sql
-    mask = _literal_mask(sql)
-    gbs = _depth0_matches(
-        sql, re.compile(r"\bGROUP\s+BY\b", re.IGNORECASE), mask
-    )
+    gbs = _scan(sql).top_matches(re.compile(r"\bGROUP\s+BY\b", re.IGNORECASE))
     if len(gbs) != 1:
         return sql
-    if _depth0_matches(
-        sql,
-        re.compile(r"\b(UNION|INTERSECT|EXCEPT)\b", re.IGNORECASE),
-        mask,
+    if _scan(sql).top_matches(
+        re.compile(r"\b(UNION|INTERSECT|EXCEPT)\b", re.IGNORECASE)
     ):
         return sql
     gb = gbs[0]
-    froms = _depth0_matches(
-        sql, re.compile(r"\bFROM\b", re.IGNORECASE), mask
-    )
+    froms = _scan(sql).top_matches(_FROM_RE)
     if not froms or froms[0].start() > gb.start():
         return sql
     fm = froms[0]
@@ -8314,22 +7963,11 @@ def _rewrite_group_by_in_subquery(sql: str) -> str:
     frombody = sql[fm.end() : gb.start()]
     rest = sql[gb.end() :]
     # split the GROUP BY key list from the HAVING/ORDER/LIMIT tail
-    rmask = _literal_mask(rest)
-    depth, cut = 0, len(rest)
     tail_kw = re.compile(
         r"\b(HAVING|ORDER\s+BY|LIMIT|OFFSET|FETCH|WINDOW)\b", re.IGNORECASE
     )
-    for m in tail_kw.finditer(rest):
-        d = 0
-        for k in range(m.start()):
-            if not rmask[k]:
-                if rest[k] == "(":
-                    d += 1
-                elif rest[k] == ")":
-                    d -= 1
-        if d == 0:
-            cut = m.start()
-            break
+    cut = next((m.start() for m in tail_kw.finditer(rest)
+                if not _scan(rest).depth(m.start())), len(rest))
     keys_text, tail_text = rest[:cut], rest[cut:]
     if re.search(
         r"\b(GROUPING\s+SETS|ROLLUP|CUBE)\b", keys_text, re.IGNORECASE
@@ -8337,22 +7975,18 @@ def _rewrite_group_by_in_subquery(sql: str) -> str:
         return sql
 
     def _has_subquery(txt: str) -> bool:
-        tm = _literal_mask(txt)
-        return any(
-            not tm[m.start()]
-            for m in re.finditer(r"\(\s*SELECT\b", txt, re.IGNORECASE)
-        )
+        return _find_outside(_PAREN_SEL_ANY_RE, txt) is not None
 
     hoists: dict[str, str] = {}  # expression text -> __inkN alias
 
     def _hoist(txt: str) -> str:
         return hoists.setdefault(txt, f"__ink{len(hoists)}")
 
-    keys = [k.strip() for k in _split_top_level(keys_text)]
+    keys = [k.strip() for k in _scan(keys_text).items()]
     for k in keys:
         if _has_subquery(k):
             _hoist(k)
-    sel_items = _split_top_level(select_list)
+    sel_items = _scan(select_list).items()
     for item in sel_items:
         core = item.strip()
         am = _AS_ALIAS_TAIL_RE.search(core)
@@ -8367,7 +8001,7 @@ def _rewrite_group_by_in_subquery(sql: str) -> str:
             open_paren = core.index("(", im.start())
             if (
                 _GB_IN_LIT_RE.match(probe)
-                and _scan_matching_paren(core, open_paren + 1) == len(core)
+                and _scan(core).close(open_paren + 1) == len(core)
             ):
                 _hoist(core)
             continue
@@ -8375,7 +8009,7 @@ def _rewrite_group_by_in_subquery(sql: str) -> str:
         if (
             core.startswith("(")
             and re.match(r"\(\s*SELECT\b", core, re.IGNORECASE)
-            and _scan_matching_paren(core, 1) == len(core)
+            and _scan(core).close(1) == len(core)
         ):
             _hoist(core)
     if not hoists:
@@ -8448,7 +8082,7 @@ def _rewrite_projected_in_subquery(sql: str) -> str:
             # is safe — the CASE form is equivalent in any context.
             try:
                 op = sql.index("(", m.start(), m.end())
-                jj = _scan_matching_paren(sql, op + 1)
+                jj = _scan(sql).close(op + 1)
             except ValueError:
                 continue
             after = sql[jj:].lstrip()
@@ -8461,7 +8095,7 @@ def _rewrite_projected_in_subquery(sql: str) -> str:
             return sql
         open_paren = sql.index("(", target.start(), target.end())
         # scan to the matching ')' of the IN-list paren
-        j = _scan_matching_paren(sql, open_paren + 1)
+        j = _scan(sql).close(open_paren + 1)
         inner = sql[open_paren + 1 : j - 1].strip()
         estart = _expr_start(sql, mask, target.start())
         if estart is None or inner[:6].upper() != "SELECT":
@@ -8519,18 +8153,8 @@ def _presto_type_to_spark(t: str) -> str | None:
             return "string"
         return _SCALAR_TYPE_MAP.get(base)
     kind, inner = m.group(1).upper(), m.group(2)
-    parts, depth, buf = [], 0, []
-    for ch in inner:
-        if ch in "(<":  # nested angle form splits like the paren form
-            depth += 1
-        elif ch in ")>":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-    parts.append("".join(buf))
+    # nested angle form splits like the paren form
+    parts = _scan(inner).split(",", "(<")
     if kind == "ARRAY" and len(parts) == 1:
         el = _presto_type_to_spark(parts[0])
         return f"array<{el}>" if el else None
@@ -8665,7 +8289,7 @@ def _parse_literal_json_value(e: str):
     if mm:
         body = mm.group(1).strip()
         return (
-            [_parse_literal_json_value(a) for a in _split_top_level(body)]
+            [_parse_literal_json_value(a) for a in _scan(body).items()]
             if body
             else []
         )
@@ -8673,7 +8297,7 @@ def _parse_literal_json_value(e: str):
     if mm:
         if not mm.group(1).strip():
             return {}
-        args = _split_top_level(mm.group(1))
+        args = _scan(mm.group(1)).items()
         if len(args) != 2:
             raise ValueError(f"map arity {e!r}")
         ks = _parse_literal_json_value(args[0])
@@ -8686,20 +8310,8 @@ def _parse_literal_json_value(e: str):
     mm = re.fullmatch(r"(?is)(?:TRY_)?CAST\s*\((.*)\)", e)
     if mm:
         inner = mm.group(1)
-        depth, in_str, as_pos = 0, False, -1
-        for k in range(len(inner) - 3):
-            c = inner[k]
-            if in_str:
-                in_str = c != "'"
-            elif c == "'":
-                in_str = True
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif depth == 0 and inner[k : k + 4].upper() == " AS ":
-                as_pos = k
-        if as_pos < 0:
+        as_pos = _scan(inner).last_top(_SPACED_AS_RE)
+        if as_pos is None:
             raise ValueError(f"cast without AS {e!r}")
         operand = inner[:as_pos].strip()
         # structure/NULL pass-throughs only: a scalar CAST can change
@@ -8822,22 +8434,10 @@ def _rewrite_cast_to_json(sql: str, scalar_cols: frozenset = frozenset()) -> str
         m = _CAST_OPEN_RE.search(sql, i)
         if not m:
             return sql
-        j = _scan_matching_paren(sql, m.end())
+        j = _scan(sql).close(m.end())
         inner = sql[m.end() : j - 1]
-        depth, in_str, as_pos = 0, False, -1
-        for k in range(len(inner) - 3):
-            c = inner[k]
-            if in_str:
-                in_str = c != "'"
-            elif c == "'":
-                in_str = True
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif depth == 0 and inner[k : k + 4].upper() == " AS ":
-                as_pos = k
-        if as_pos < 0 or inner[as_pos + 4 :].strip().upper() != "JSON":
+        as_pos = _scan(inner).last_top(_SPACED_AS_RE)
+        if as_pos is None or inner[as_pos + 4 :].strip().upper() != "JSON":
             i = m.end()
             continue
         expr = inner[:as_pos].strip()
@@ -8875,7 +8475,7 @@ def _rewrite_cast_to_json(sql: str, scalar_cols: frozenset = frozenset()) -> str
             i = m.start() + len(repl)
             continue
         rm = re.fullmatch(r"(?is)ROW\s*\((.*)\)", expr)
-        args = _split_top_level(rm.group(1)) if rm else None
+        args = _scan(rm.group(1)).items() if rm else None
         if args and all(_flat_scalar_row_arg(a, scalar_cols) for a in args):
             elems = ", ".join(_jvm_json_elem(a) for a in args)
             repl = f"concat('[', concat_ws(',', {elems}), ']')"
@@ -8921,23 +8521,6 @@ def _json_scalar_coercion(t: str, v: str) -> str | None:
     return None
 
 
-def _split_presto_type_args(inner: str) -> list[str]:
-    """Depth-0 comma split over a Presto/angle type argument list."""
-    parts, depth, buf = [], 0, []
-    for ch in inner:
-        if ch in "(<":
-            depth += 1
-        elif ch in ")>":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-    parts.append("".join(buf))
-    return parts
-
-
 def _json_row_cast_expr(expr: str, ttype: str) -> str | None:
     """``CAST(json AS ROW(f1 T1, …))`` (JsonToRowCast.java): a JSON
     ARRAY binds fields POSITIONALLY, a JSON OBJECT binds by field name,
@@ -8956,7 +8539,7 @@ def _json_row_cast_expr(expr: str, ttype: str) -> str | None:
     parts = []
     e = f"({expr})"
     arr_form = f"startswith(ltrim({e}), '[')"
-    for i, f in enumerate(_split_presto_type_args(m.group(1))):
+    for i, f in enumerate(_scan(m.group(1)).split(",", "(<")):
         f = f.strip()
         fm = re.match(r"^(\w+)\s+(.+)$", f, re.DOTALL)
         if fm and _presto_type_to_spark(fm.group(2)) is not None:
@@ -9032,7 +8615,7 @@ def _json_composite_parse(expr: str, ttype: str, schema: str) -> str:
         )
     mm = re.match(r"^MAP\s*[(<](.*)[)>]$", t, re.IGNORECASE | re.DOTALL)
     if mm:
-        kv = _split_presto_type_args(mm.group(1))
+        kv = _scan(mm.group(1)).split(",", "(<")
         if len(kv) == 2 and kv[1].strip().upper() == "JSON":
             # MAP(K, JSON): values stay JSON TEXT fragments
             # (JsonToMapCast with JSON value type — MO380)
@@ -9080,39 +8663,33 @@ def _json_parse_expr(expr: str, schema: str) -> str:
     as raw text and coerce per Presto's JSON rules (mixed true/12.7/"12"
     inputs — from_json's strict typing would null the whole map)."""
     km = re.match(r"^map<(.+)>$", schema, re.DOTALL)
-    if km:
-        s, depth = km.group(1), 0
-        for idx, ch in enumerate(s):
-            if ch in "<(":
-                depth += 1
-            elif ch in ">)":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                key, val = s[:idx].strip(), s[idx + 1 :].strip()
-                coerce = _json_scalar_coercion(val, "__jv")
-                if coerce is not None:
-                    # strict parse first — it reads numeric lexemes at
-                    # full precision (the string-valued parse routes
-                    # numbers through double, corrupting wide decimals,
-                    # MO481); the coercion path only engages when mixed
-                    # true/"12"/12.7 values null the strict parse
-                    strict = f"from_json({expr}, 'map<string,{val}>')"
-                    base = (
-                        f"coalesce({strict}, "
-                        f"transform_values(from_json({expr}, "
-                        f"'map<string,string>'), (__jk0, __jv) -> "
-                        f"{coerce}))"
-                    )
-                elif key != "string":
-                    base = f"from_json({expr}, 'map<string,{val}>')"
-                else:
-                    break
-                if key != "string":
-                    base = (
-                        f"transform_keys({base}, "
-                        f"(__jk, __jv2) -> CAST(__jk AS {key}))"
-                    )
-                return base
+    key, *rest = _scan(km.group(1)).split(",", "(<") if km else [""]
+    if rest:
+        key, val = key.strip(), ",".join(rest).strip()
+        coerce = _json_scalar_coercion(val, "__jv")
+        if coerce is not None:
+            # strict parse first — it reads numeric lexemes at
+            # full precision (the string-valued parse routes
+            # numbers through double, corrupting wide decimals,
+            # MO481); the coercion path only engages when mixed
+            # true/"12"/12.7 values null the strict parse
+            strict = f"from_json({expr}, 'map<string,{val}>')"
+            base = (
+                f"coalesce({strict}, "
+                f"transform_values(from_json({expr}, "
+                f"'map<string,string>'), (__jk0, __jv) -> "
+                f"{coerce}))"
+            )
+        elif key != "string":
+            base = f"from_json({expr}, 'map<string,{val}>')"
+        else:
+            return f"from_json({expr}, '{schema}')"
+        if key != "string":
+            base = (
+                f"transform_keys({base}, "
+                f"(__jk, __jv2) -> CAST(__jk AS {key}))"
+            )
+        return base
     return f"from_json({expr}, '{schema}')"
 
 
@@ -9127,26 +8704,11 @@ def _rewrite_json_casts(sql: str) -> str:
         m = _CAST_OPEN_RE.search(sql, i)
         if not m:
             return sql
-        j = _scan_matching_paren(sql, m.end())
+        j = _scan(sql).close(m.end())
         inner = sql[m.end() : j - 1]
         # last top-level " AS " splits expr from target type
-        depth, in_str, as_pos = 0, False, -1
-        for k in range(len(inner) - 3):
-            c = inner[k]
-            if in_str:
-                in_str = c != "'"
-            elif c == "'":
-                in_str = True
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif (
-                depth == 0
-                and inner[k : k + 4].upper() == " AS "
-            ):
-                as_pos = k
-        if as_pos < 0:
+        as_pos = _scan(inner).last_top(_SPACED_AS_RE)
+        if as_pos is None:
             i = m.end()
             continue
         ttype = inner[as_pos + 4 :].strip()
@@ -9225,22 +8787,10 @@ def _rewrite_json_casts(sql: str) -> str:
 def _parse_char_cast(sql: str, m) -> tuple[str, str, int, int] | None:
     """If the CAST opening at match ``m`` targets CHAR(n), return
     (cast_keyword, operand_text, n, end_of_span); else None."""
-    j = _scan_matching_paren(sql, m.end())
+    j = _scan(sql).close(m.end())
     inner = sql[m.end() : j - 1]
-    depth, in_str, as_pos = 0, False, -1
-    for k in range(len(inner) - 3):
-        c = inner[k]
-        if in_str:
-            in_str = c != "'"
-        elif c == "'":
-            in_str = True
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0 and inner[k : k + 4].upper() == " AS ":
-            as_pos = k
-    if as_pos < 0:
+    as_pos = _scan(inner).last_top(_SPACED_AS_RE)
+    if as_pos is None:
         return None
     tm = re.match(
         r"^CHAR\s*\(\s*(\d+)\s*\)\s*$", inner[as_pos + 4 :].strip(),
@@ -9269,16 +8819,16 @@ def _derived_select_aliases(sql: str) -> list[tuple[str, str]]:
     for m in _SUBQ_SELECT_RE.finditer(sql):
         if mask[m.start()]:
             continue
-        close = _scan_matching_paren(sql, m.start() + 1)
+        close = _scan(sql).close(m.start() + 1)
         body = sql[m.start() + 1 : close - 1]
         sm = re.match(
             r"\s*SELECT\s+(?:DISTINCT\s+|ALL\s+)?", body, re.IGNORECASE
         )
         if sm is None:
             continue
-        fpos = _top_level_from(body)
+        fpos = next((m.start() for m in _scan(body).top_matches(_FROM_RE)), -1)
         items = body[sm.end() : fpos if fpos >= 0 else len(body)]
-        for item in _split_top_level(items):
+        for item in _scan(items).items():
             am = re.search(r"\s+AS\s+([A-Za-z_]\w*)\s*$", item, re.IGNORECASE)
             if am:
                 out.append((item[: am.start()].strip(), am.group(1).lower()))
@@ -9687,25 +9237,20 @@ def _rewrite_frameless_window_frames(sql: str) -> str:
     }
     pos = 0
     while True:
-        mask = _literal_mask(sql)
-        m = next(
-            (
-                c
-                for c in _FRAMELESS_OVER_RE.finditer(sql, pos)
-                if not mask[c.start()] and c.group(1).lower() in strip_for
-            ),
-            None,
-        )
+        m = next((
+            c for c in _outside(_FRAMELESS_OVER_RE, sql, pos)
+            if c.group(1).lower() in strip_for
+        ), None)
         if m is None:
             return sql
-        call_end = _scan_matching_paren(sql, m.end())
+        call_end = _scan(sql).close(m.end())
         om = re.match(r"\s*(?:IGNORE\s+NULLS\s*)?OVER\s*\(", sql[call_end:],
                       re.IGNORECASE)
         if not om:
             pos = call_end
             continue
         span_start = call_end + om.end()
-        span_end = _scan_matching_paren(sql, span_start)
+        span_end = _scan(sql).close(span_start)
         spec = sql[span_start : span_end - 1]
         new_spec = _FRAME_TAIL_RE.sub("", spec)
         sql = sql[:span_start] + new_spec + sql[span_end - 1 :]
@@ -9733,7 +9278,7 @@ def _rewrite_plain_grouping(sql: str) -> str:
     out, i = [], 0
     while i < len(sql):
         if sql[i] == "(" and not mask[i]:
-            j = _scan_matching_paren(sql, i + 1)
+            j = _scan(sql).close(i + 1)
             out.append("(" + _rewrite_plain_grouping(sql[i + 1 : j - 1]) + ")")
             i = j
         else:
@@ -9754,7 +9299,7 @@ def _plain_grouping_one_scope(sql: str) -> str:
     if not _GROUPING_CALL_RE.search(sql):
         return sql
     _pg_mask = _literal_mask(sql)
-    _pg_sub = _subquery_mask(sql, _pg_mask)
+    _pg_sub = _subquery_mask(sql)
     if any(
         not _pg_sub[m.start()] and not _pg_mask[m.start()]
         for m in _GSETS_ANY_RE.finditer(sql)
@@ -9763,52 +9308,28 @@ def _plain_grouping_one_scope(sql: str) -> str:
 
     def _group_exprs() -> set[str]:
         mask = _literal_mask(sql)
-        sub = _subquery_mask(sql, mask)
+        sub = _subquery_mask(sql)
         out: set[str] = set()
         for gm in re.finditer(r"\bGROUP\s+BY\b", sql, re.IGNORECASE):
             if mask[gm.start()] or sub[gm.start()]:
                 continue
-            depth, j = 0, gm.end()
-            while j < len(sql):
-                c = sql[j]
-                if not mask[j]:
-                    if c == "(":
-                        depth += 1
-                    elif c == ")":
-                        if depth == 0:
-                            break
-                        depth -= 1
-                    elif depth == 0 and re.match(
-                        r"(HAVING|ORDER|LIMIT|OFFSET|FETCH|UNION|"
-                        r"INTERSECT|EXCEPT|WINDOW)\b",
-                        sql[j:],
-                        re.IGNORECASE,
-                    ):
-                        break
-                j += 1
+            j = _scan(sql).run(gm.end(), _GROUP_BY_END_RE, "(")[-1][1]
             out.update(
                 " ".join(e.split()).lower()
-                for e in _split_top_level(sql[gm.end() : j])
+                for e in _scan(sql[gm.end() : j]).items()
             )
         return out
 
     grouped = _group_exprs()
     i = 0
     while True:
-        mask = _literal_mask(sql)
-        sub = _subquery_mask(sql, mask)
-        m = next(
-            (
-                c
-                for c in _GROUPING_CALL_RE.finditer(sql, i)
-                if not mask[c.start()] and not sub[c.start()]
-            ),
-            None,
-        )
+        sub = _subquery_mask(sql)
+        m = next((c for c in _outside(_GROUPING_CALL_RE, sql, i)
+                  if not sub[c.start()]), None)
         if m is None:
             return sql
-        end = _scan_matching_paren(sql, m.end())
-        args = _split_top_level(sql[m.end() : end - 1])
+        end = _scan(sql).close(m.end())
+        args = _scan(sql[m.end() : end - 1]).items()
         if args and all(" ".join(a.split()).lower() in grouped for a in args):
             sql = sql[: m.start()] + "0" + sql[end:]
             i = m.start() + 1
@@ -9816,6 +9337,10 @@ def _plain_grouping_one_scope(sql: str) -> str:
             i = end  # not a grouping column — leave for the analyzer
 
 
+_GROUP_BY_END_RE = re.compile(
+    r"(HAVING|ORDER|LIMIT|OFFSET|FETCH|UNION|INTERSECT|EXCEPT|WINDOW)\b",
+    re.IGNORECASE,
+)
 _GOB_CHAIN_RE = re.compile(r"[A-Za-z_]\w*(?:\s*\.\s*[A-Za-z_]\w*)*")
 _GOB_KEYWORDS = frozenset(
     "asc desc nulls first last and or not case when then else end is "
@@ -9845,30 +9370,27 @@ def _rewrite_grouping_order_hoist(sql: str) -> str:
     agree there). Subquery-bearing items are the other hoist's job."""
     if not re.match(r"\s*SELECT\b", sql, re.IGNORECASE):
         return sql
-    mask = _literal_mask(sql)
-    obs = _depth0_matches(sql, re.compile(r"\bORDER\s+BY\b", re.IGNORECASE), mask)
-    gbs = _depth0_matches(sql, _GB_KEYWORD_RE, mask)
+    obs = _scan(sql).top_matches(re.compile(r"\bORDER\s+BY\b", re.IGNORECASE))
+    gbs = _scan(sql).top_matches(_GB_KEYWORD_RE)
     if len(obs) != 1 or len(gbs) != 1 or obs[0].start() < gbs[0].start():
         return sql
     if not any(
         gbs[0].end() <= m.start() < obs[0].start()
-        for m in _depth0_matches(sql, _GSETS_ANY_RE, mask)
+        for m in _scan(sql).top_matches(_GSETS_ANY_RE)
     ):
         return sql
-    if _depth0_matches(
-        sql,
-        re.compile(r"\b(UNION|INTERSECT|EXCEPT|DISTINCT)\b", re.IGNORECASE),
-        mask,
-    ):
+    if _scan(sql).top_matches(re.compile(
+        r"\b(UNION|INTERSECT|EXCEPT|DISTINCT)\b", re.IGNORECASE
+    )):
         return sql
-    froms = _depth0_matches(sql, re.compile(r"\bFROM\b", re.IGNORECASE), mask)
+    froms = _scan(sql).top_matches(_FROM_RE)
     if not froms:
         return sql
     ob = obs[0]
     end_m = next(
         (
             m
-            for m in _depth0_matches(sql, _OB_CLAUSE_END_RE, mask)
+            for m in _scan(sql).top_matches(_OB_CLAUSE_END_RE)
             if m.start() >= ob.end()
         ),
         None,
@@ -9878,8 +9400,8 @@ def _rewrite_grouping_order_hoist(sql: str) -> str:
     sel_m = re.match(r"\s*SELECT\s+", sql, re.IGNORECASE)
     select_list = sql[sel_m.end() : froms[0].start()]
     out_names = set()
-    for item in _split_top_level(select_list):
-        im = _mask_parens_and_literals(item)
+    for item in _scan(select_list).items():
+        im = _scan(item).flat()
         am = re.search(r"\sAS\s+(\w+)\s*$", im, re.IGNORECASE)
         if am:
             out_names.add(am.group(1).lower())
@@ -9887,7 +9409,7 @@ def _rewrite_grouping_order_hoist(sql: str) -> str:
             out_names.add(item.strip().lower())
 
     def _idents(expr: str) -> list[str]:
-        toks, em = [], _mask_parens_and_literals(expr)
+        toks, em = [], _scan(expr).flat()
         # scan the masked text so literal contents don't read as names,
         # but slice chains from the raw expr (same offsets)
         for m in _GOB_CHAIN_RE.finditer(em):
@@ -9899,7 +9421,7 @@ def _rewrite_grouping_order_hoist(sql: str) -> str:
             toks.append(parts[0] if len(parts) == 1 else ".".join(parts))
         return toks
 
-    items = _split_top_level(sql[ob.end() : ob_end])
+    items = _scan(sql[ob.end() : ob_end]).items()
     hoisted, new_items, changed = [], [], False
     for it in items:
         tail_m = _ORDER_TAIL_RE.search(it)
@@ -9955,24 +9477,6 @@ _AS_ALIAS_TAIL_RE = re.compile(r"\s+AS\s+([A-Za-z_]\w*)\s*$", re.IGNORECASE)
 _QUAL_REF_RE = re.compile(r"\b([A-Za-z_]\w*)\s*\.\s*([A-Za-z_]\w*)\b")
 
 
-def _depth0_matches(sql: str, pat: re.Pattern, mask: list) -> list:
-    """Matches of ``pat`` at paren depth 0, outside literals."""
-    depth = 0
-    depths = [0] * len(sql)
-    for i, c in enumerate(sql):
-        if not mask[i]:
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-        depths[i] = depth
-    return [
-        m
-        for m in pat.finditer(sql)
-        if not mask[m.start()] and depths[m.start()] == 0
-    ]
-
-
 def _rewrite_window_in_order_by(sql: str) -> str:
     """Window functions in the final ORDER BY (AbstractTestQueries.java
     testOrderByWithOutputColumnReference window block): Presto evaluates
@@ -9987,7 +9491,7 @@ def _rewrite_window_in_order_by(sql: str) -> str:
     if not re.match(r"SELECT\b", stripped, re.IGNORECASE):
         return sql
     mask = _literal_mask(sql)
-    obs = _depth0_matches(sql, _OB_RE, mask)
+    obs = _scan(sql).top_matches(_OB_RE)
     if not obs:
         return sql
     ob = obs[-1]
@@ -9996,17 +9500,10 @@ def _rewrite_window_in_order_by(sql: str) -> str:
     items_text = tail
     # depth-0 only: a LIMIT inside a subquery in a sort item is not the
     # statement tail
-    tdepth, depths = 0, []
-    for idx, c in enumerate(tail):
-        depths.append(tdepth)
-        if not mask[ob.end() + idx]:
-            if c == "(":
-                tdepth += 1
-            elif c == ")":
-                tdepth -= 1
+    sc = _scan(sql)
     for m in _LIMIT_TAIL_KW_RE.finditer(tail):
         pos = ob.end() + m.start()
-        if not mask[pos] and depths[m.start()] == 0:
+        if not mask[pos] and sc.depth(pos) == sc.depth(ob.end()):
             items_text = tail[: m.start()]
             lim = tail[m.start() :]
             break
@@ -10015,7 +9512,7 @@ def _rewrite_window_in_order_by(sql: str) -> str:
     sel_m = re.match(r"\s*SELECT\s+", sql, re.IGNORECASE)
     if re.match(r"(DISTINCT|ALL)\b", sql[sel_m.end() :], re.IGNORECASE):
         return sql
-    froms = _depth0_matches(sql, re.compile(r"\bFROM\b", re.IGNORECASE), mask)
+    froms = _scan(sql).top_matches(_FROM_RE)
     if not froms:
         return sql
     fm = froms[0]
@@ -10025,7 +9522,7 @@ def _rewrite_window_in_order_by(sql: str) -> str:
     # column ref or carry an AS alias — else the hoist can't name the
     # outer projection and the statement is left unchanged
     names = []
-    for item in _split_top_level(select_list):
+    for item in _scan(select_list).items():
         am = _AS_ALIAS_TAIL_RE.search(item)
         if am:
             names.append(am.group(1))
@@ -10034,14 +9531,13 @@ def _rewrite_window_in_order_by(sql: str) -> str:
         else:
             return sql
     has_group = bool(
-        _depth0_matches(body, re.compile(r"\bGROUP\s+BY\b", re.IGNORECASE),
-                        _literal_mask(body))
+        _scan(body).top_matches(re.compile(r"\bGROUP\s+BY\b", re.IGNORECASE))
     )
     lower_names = {n.lower() for n in names}
     sort_specs = []
     passthrough: dict = {}
     unqual_passthrough: list[str] = []
-    for si in _split_top_level(items_text):
+    for si in _scan(items_text).items():
         si = si.strip()
         dm = _SORT_DIR_TAIL_RE.search(si)
         expr, direction = si[: dm.start()].strip(), si[dm.start() :].strip()
@@ -10067,7 +9563,7 @@ def _rewrite_window_in_order_by(sql: str) -> str:
         # only custkey selected); thread them through by name so the
         # hoisted projection over the derived table still resolves them
         emask = _literal_mask(expr)
-        esub = _subquery_mask(expr, emask)
+        esub = _subquery_mask(expr)
         for im in re.finditer(r"\b[A-Za-z_]\w*\b", expr):
             if emask[im.start()] or esub[im.start()]:
                 continue
@@ -10107,25 +9603,18 @@ def _rewrite_window_in_order_by(sql: str) -> str:
     )
 
 
-def _subquery_mask(expr: str, lit_mask: list) -> list:
-    """True for positions inside a ``(SELECT …)`` group — refs there
-    resolve in the subquery's own scope and must not be rewritten."""
-    out = [False] * len(expr)
-    stack: list[bool] = []
-    for i, c in enumerate(expr):
-        if not lit_mask[i]:
-            if c == "(":
-                j = i + 1
-                while j < len(expr) and expr[j].isspace():
-                    j += 1
-                is_sub = expr[j : j + 6].upper() == "SELECT" and (
-                    j + 6 >= len(expr) or not expr[j + 6].isalnum()
-                )
-                stack.append(is_sub or (bool(stack) and stack[-1]))
-            elif c == ")" and stack:
-                stack.pop()
-        if stack and stack[-1]:
-            out[i] = True
+_SUBQ_OPEN_RE = re.compile(r"\(\s*SELECT(?![^\W_])", re.IGNORECASE)
+
+
+def _subquery_mask(expr: str) -> list:
+    """True for positions inside a ``(SELECT …)`` group, from its open
+    paren up to its close — refs there resolve in the subquery's own
+    scope and must not be rewritten."""
+    sc, out = _scan(expr), [False] * len(expr)
+    for m in _outside(_SUBQ_OPEN_RE, expr):
+        end = sc.match(m.end())
+        end = len(expr) if end < 0 else end
+        out[m.start() : end] = [True] * (end - m.start())
     return out
 
 
@@ -10134,7 +9623,7 @@ def _iter_qual_subst(expr: str, mask: list):
     non-overlapping, skipping literal regions, qualified FUNCTION calls
     (``db.fn(x)`` — the dot chain names a routine, not a column), and
     subquery bodies (their refs resolve in their own scope)."""
-    sub = _subquery_mask(expr, mask)
+    sub = _subquery_mask(expr)
     i = 0
     while i < len(expr):
         m = _QUAL_REF_RE.match(expr, i)
@@ -10186,7 +9675,7 @@ def _rewrite_unordered_ranking_windows(sql: str) -> str:
         m = _RANKING_OVER_RE.search(sql, i)
         if not m:
             return sql
-        j = _scan_matching_paren(sql, m.end())
+        j = _scan(sql).close(m.end())
         body = sql[m.end() : j - 1]
         # top-level ORDER BY only (not one inside a nested expression)
         depth = 0
@@ -10226,7 +9715,7 @@ def _rewrite_quantified(sql: str) -> str:
         op, quant = m.group(1), m.group(2).upper()
         if quant == "SOME":
             quant = "ANY"
-        j = _scan_matching_paren(sql, m.end())
+        j = _scan(sql).close(m.end())
         inner = sql[m.end() : j - 1].strip()
         replaced = None
         consumed_from = None  # set when the rewrite swallows the left expr
@@ -10321,7 +9810,7 @@ _PAREN_SEL_RE = re.compile(r"\(\s*SELECT\b", re.IGNORECASE)
 def _fromless_parts(body: str):
     """(items_txt, where_txt|None) when ``body`` is a FROM-less simple
     select (Presto's implicit one-row VALUES), else None."""
-    bm = _mask_parens_and_literals(body)
+    bm = _scan(body).flat()
     if re.search(
         r"\b(FROM|UNION|INTERSECT|EXCEPT|GROUP|HAVING|ORDER|LIMIT|"
         r"OFFSET|FETCH|OVER|DISTINCT)\b",
@@ -10335,38 +9824,39 @@ def _fromless_parts(body: str):
     return body, None
 
 
-def _in_relation_position(sql: str, pos: int, mask: list) -> bool:
+_RELATION_WORDS = {"FROM": True, "JOIN": True} | dict.fromkeys((
+    "SELECT", "WHERE", "ON", "HAVING", "BY", "WHEN", "THEN", "ELSE", "AND",
+    "OR", "NOT", "IN", "EXISTS", "UNION", "INTERSECT", "EXCEPT", "VALUES",
+    "SET",
+), False)
+# a word up to its last letter: ``FROM1`` reads as FROM, ``t1`` as T
+_WORD_TO_LAST_LETTER_RE = re.compile(r"\w*[^\W\d]")
+
+
+@functools.lru_cache(maxsize=8)
+def _relation_words(sql: str) -> dict[int, tuple[list[int], list[bool]]]:
+    """Per paren depth: positions of the clause keywords that decide
+    ``_in_relation_position``, and whether each opens a relation."""
+    sc, out = _scan(sql), {}
+    for m in _outside(_WORD_TO_LAST_LETTER_RE, sql):
+        rel = _RELATION_WORDS.get(m.group().upper())
+        if rel is not None:
+            pos, rels = out.setdefault(sc.depth(m.start()), ([], []))
+            pos.append(m.start())
+            rels.append(rel)
+    return out
+
+
+def _in_relation_position(sql: str, pos: int) -> bool:
     """True when the paren at ``pos`` opens a derived table — directly
     after FROM/JOIN, or comma-joined inside a FROM clause (``FROM a,
-    (SELECT …) t``). Walks backwards at the same paren depth until a
-    clause keyword decides it."""
-    depth, i = 0, pos - 1
-    while i >= 0:
-        c = sql[i]
-        if not mask[i]:
-            if c == ")":
-                depth += 1
-            elif c == "(":
-                depth -= 1
-                if depth < 0:
-                    return False  # inside an expression's parens
-            elif depth == 0 and (c.isalpha() or c == "_"):
-                j = i
-                while j >= 0 and (sql[j].isalnum() or sql[j] == "_"):
-                    j -= 1
-                w = sql[j + 1 : i + 1].upper()
-                if w in ("FROM", "JOIN"):
-                    return True
-                if w in (
-                    "SELECT", "WHERE", "ON", "HAVING", "BY", "WHEN",
-                    "THEN", "ELSE", "AND", "OR", "NOT", "IN", "EXISTS",
-                    "UNION", "INTERSECT", "EXCEPT", "VALUES", "SET",
-                ):
-                    return False
-                i = j
-                continue
-        i -= 1
-    return False
+    (SELECT …) t``): the nearest clause keyword before it at the same
+    depth, inside the same group, decides it."""
+    sc = _scan(sql)
+    depth = sc.depth(pos)
+    pos_list, rels = _relation_words(sql).get(depth, ((), ()))
+    k = bisect_left(pos_list, pos) - 1
+    return k >= 0 and pos_list[k] > sc.open_of(pos) and rels[k]
 
 
 _PAREN_SEL_ANY_RE = re.compile(r"\(\s*SELECT\b", re.IGNORECASE)
@@ -10394,7 +9884,7 @@ def _collapse_trivial_subquery_wrappers(sql: str) -> str:
             p = m.start()
             if mask[p]:
                 continue
-            close = _scan_matching_paren(sql, p + 1)
+            close = _scan(sql).close(p + 1)
             body = sql[p + 1 : close - 1]
             star = re.match(
                 r"\s*SELECT\s+\*\s+FROM\s*\(", body, re.IGNORECASE
@@ -10411,7 +9901,7 @@ def _collapse_trivial_subquery_wrappers(sql: str) -> str:
                 r"\s*SELECT\b", body[inner_open + 1 :], re.IGNORECASE
             ):
                 continue
-            inner_close = _scan_matching_paren(body, inner_open + 1)
+            inner_close = _scan(body).close(inner_open + 1)
             if body[inner_close:].strip():
                 continue  # alias / WHERE / anything else: not a no-op
             sql = (
@@ -10447,19 +9937,11 @@ def _rewrite_fromless_subqueries(sql: str) -> str:
     # EXISTS first — the scalar pass below would otherwise see its paren
     i = 0
     while True:
-        mask = _literal_mask(sql)
-        m = next(
-            (
-                c
-                for c in _EXISTS_SEL_RE.finditer(sql, i)
-                if not mask[c.start()]
-            ),
-            None,
-        )
+        m = _find_outside(_EXISTS_SEL_RE, sql, i)
         if m is None:
             break
         open_p = sql.index("(", m.start())
-        close = _scan_matching_paren(sql, open_p + 1)
+        close = _scan(sql).close(open_p + 1)
         body = sql[open_p + 1 : close - 1]
         sel = re.match(r"\s*SELECT\b", body, re.IGNORECASE)
         parts = _fromless_parts(body[sel.end() :])
@@ -10472,19 +9954,11 @@ def _rewrite_fromless_subqueries(sql: str) -> str:
         i = m.start()
     i = 0
     while True:
-        mask = _literal_mask(sql)
-        m = next(
-            (
-                c
-                for c in _PAREN_SEL_RE.finditer(sql, i)
-                if not mask[c.start()]
-            ),
-            None,
-        )
+        m = _find_outside(_PAREN_SEL_RE, sql, i)
         if m is None:
             return sql
         before = sql[: m.start()].rstrip()
-        close_peek = _scan_matching_paren(sql, m.start() + 1)
+        close_peek = _scan(sql).close(m.start() + 1)
         after = sql[close_peek:].lstrip()
         if (
             re.search(
@@ -10495,12 +9969,12 @@ def _rewrite_fromless_subqueries(sql: str) -> str:
                 re.IGNORECASE,
             )
             or re.match(r"(UNION|INTERSECT|EXCEPT)\b", after, re.IGNORECASE)
-            or _in_relation_position(sql, m.start(), mask)
+            or _in_relation_position(sql, m.start())
         ):
             # subquery-operator position / relation position — leave
             i = m.start() + 1
             continue
-        close = _scan_matching_paren(sql, m.start() + 1)
+        close = _scan(sql).close(m.start() + 1)
         body = sql[m.start() + 1 : close - 1]
         sel = re.match(r"\s*SELECT\b", body, re.IGNORECASE)
         parts = _fromless_parts(body[sel.end() :])
@@ -10508,12 +9982,12 @@ def _rewrite_fromless_subqueries(sql: str) -> str:
             i = m.start() + 1
             continue
         items_txt, where = parts
-        items = _split_top_level(items_txt)
+        items = _scan(items_txt).items()
         if len(items) != 1:
             i = m.start() + 1
             continue
         item = items[0].strip()
-        am = _AS_ALIAS_TAIL_RE.search(_mask_parens_and_literals(item))
+        am = _AS_ALIAS_TAIL_RE.search(_scan(item).flat())
         if am:
             item = item[: am.start()].strip()
         if where is None:
@@ -10562,12 +10036,12 @@ def _rewrite_values_scalar_lists(sql: str) -> str:
         mask = _literal_mask(sql)
         for m in _VALUES_OPEN_RE.finditer(sql):
             p = m.start()
-            if mask[p] or _in_relation_position(sql, p, mask):
+            if mask[p] or _in_relation_position(sql, p):
                 continue
-            close = _scan_matching_paren(sql, p + 1)
+            close = _scan(sql).close(p + 1)
             body = sql[p + 1 : close - 1]
             vm = re.match(r"\s*VALUES\b", body, re.IGNORECASE)
-            cells = _split_top_level(body[vm.end() :])
+            cells = _scan(body[vm.end() :]).items()
             if not all(_SCALAR_CELL_RE.fullmatch(c) for c in cells):
                 continue
             # expression position only: the token before must be a
@@ -10601,7 +10075,7 @@ def _unwrap_parenthesized_joins(sql: str) -> str:
         mask = _literal_mask(sql)
         for m in re.finditer(r"\(", sql):
             p = m.start()
-            if mask[p] or not _in_relation_position(sql, p, mask):
+            if mask[p] or not _in_relation_position(sql, p):
                 continue
             # a group that is the RIGHT operand of a join keeps its
             # parens: stripping them re-associates the ON clauses
@@ -10611,7 +10085,7 @@ def _unwrap_parenthesized_joins(sql: str) -> str:
             bm = re.search(r"([A-Za-z_]\w*)\s*$", sql[:p])
             if bm and bm.group(1).upper() == "JOIN":
                 continue
-            close = _scan_matching_paren(sql, p + 1)
+            close = _scan(sql).close(p + 1)
             body = sql[p + 1 : close - 1]
             # a body that IS a query (derived table) keeps its parens —
             # its internal joins belong to the subquery, not the FROM
@@ -10619,8 +10093,7 @@ def _unwrap_parenthesized_joins(sql: str) -> str:
                 r"\s*(SELECT|VALUES|WITH|TABLE)\b", body, re.IGNORECASE
             ):
                 continue
-            bmask = _literal_mask(body)
-            if not _depth0_matches(body, _JOIN_KW_RE, bmask):
+            if not _scan(body).top_matches(_JOIN_KW_RE):
                 continue
             after = sql[close:].lstrip()
             am = re.match(r"(?:AS\s+)?([A-Za-z_]\w*)", after, re.IGNORECASE)
@@ -10666,39 +10139,30 @@ def _rewrite_order_by_subquery_hoist(sql: str) -> str:
     relation."""
     if not re.match(r"\s*SELECT\b", sql, re.IGNORECASE):
         return sql
-    mask = _literal_mask(sql)
-    obs = _depth0_matches(
-        sql, re.compile(r"\bORDER\s+BY\b", re.IGNORECASE), mask
-    )
+    obs = _scan(sql).top_matches(re.compile(r"\bORDER\s+BY\b", re.IGNORECASE))
     if len(obs) != 1:
         return sql
-    if _depth0_matches(
-        sql,
-        re.compile(
+    if _scan(sql).top_matches(re.compile(
             r"\b(UNION|INTERSECT|EXCEPT|GROUP\s+BY|HAVING|DISTINCT)\b",
             re.IGNORECASE,
-        ),
-        mask,
-    ):
+        )):
         return sql
     ob = obs[0]
     end_m = next(
         (
             m
-            for m in _depth0_matches(sql, _OB_CLAUSE_END_RE, mask)
+            for m in _scan(sql).top_matches(_OB_CLAUSE_END_RE)
             if m.start() >= ob.end()
         ),
         None,
     )
     ob_end = end_m.start() if end_m else len(sql)
-    items = _split_top_level(sql[ob.end() : ob_end])
+    items = _scan(sql[ob.end() : ob_end]).items()
     if not any(
         re.search(r"\(\s*SELECT\b", it, re.IGNORECASE) for it in items
     ):
         return sql
-    froms = _depth0_matches(
-        sql, re.compile(r"\bFROM\b", re.IGNORECASE), mask
-    )
+    froms = _scan(sql).top_matches(_FROM_RE)
     if not froms:
         return sql
     sel_m = re.match(r"\s*SELECT\s+", sql, re.IGNORECASE)
@@ -10751,7 +10215,7 @@ def _has_correlated_subquery(cond: str) -> bool:
     subquery — i.e. an outer (correlated) reference. Uncorrelated
     subqueries in join-ON are left alone: Spark executes those natively."""
     for m in _SQ_OPEN_RE.finditer(cond):
-        close = _scan_matching_paren(cond, m.start() + 1)
+        close = _scan(cond).close(m.start() + 1)
         body = cond[m.start() + 1 : close - 1]
         inner_aliases = {
             a.lower()
@@ -10788,7 +10252,7 @@ def _fold_uncorrelated_exists(cond: str) -> str | None:
         for m in re.finditer(r"\bEXISTS\s*\(", out, re.IGNORECASE):
             if mask[m.start()]:
                 continue
-            close = _scan_matching_paren(out, m.end())
+            close = _scan(out).close(m.end())
             inner = out[m.end() : close - 1]
             if not re.match(r"\s*SELECT\b", inner, re.IGNORECASE):
                 continue
@@ -10818,8 +10282,7 @@ def _rewrite_join_on_subquery(sql: str) -> str:
     there: assertQueryFails '.* not supported')."""
     if not re.match(r"\s*SELECT\b", sql, re.IGNORECASE):
         return sql
-    mask = _literal_mask(sql)
-    for jm in _depth0_matches(sql, _JOIN_KW_RE, mask):
+    for jm in _scan(sql).top_matches(_JOIN_KW_RE):
         before = sql[: jm.start()].rstrip()
         outer = bool(
             re.search(
@@ -10828,16 +10291,9 @@ def _rewrite_join_on_subquery(sql: str) -> str:
                 re.IGNORECASE,
             )
         )
-        on_m = next(
-            (
-                m
-                for m in _depth0_matches(
-                    sql, re.compile(r"\bON\b", re.IGNORECASE), mask
-                )
-                if m.start() >= jm.end()
-            ),
-            None,
-        )
+        on_m = next((
+            m for m in _scan(sql).top_matches(_ON_RE) if m.start() >= jm.end()
+        ), None)
         if on_m is None:
             continue
         # the ON must belong to THIS join: a depth-0 USING or another
@@ -10845,16 +10301,15 @@ def _rewrite_join_on_subquery(sql: str) -> str:
         # (or absent — CROSS/NATURAL) and the matched ON pairs with a
         # later join, which the loop will visit on its own
         between = sql[jm.end() : on_m.start()]
-        bmask = mask[jm.end() : on_m.start()]
-        if _depth0_matches(
-            between, re.compile(r"\bUSING\b", re.IGNORECASE), bmask
-        ) or _depth0_matches(between, _JOIN_KW_RE, bmask):
+        if _scan(between).top_matches(_USING_RE) or _scan(
+            between
+        ).top_matches(_JOIN_KW_RE):
             continue
         on_start = on_m.end()
         end_m = next(
             (
                 m
-                for m in _depth0_matches(sql, _ON_CLAUSE_END_RE, mask)
+                for m in _scan(sql).top_matches(_ON_CLAUSE_END_RE)
                 if m.start() >= on_start
             ),
             None,
@@ -10891,8 +10346,7 @@ def _rewrite_join_on_subquery(sql: str) -> str:
         ).strip()
         # insert at the statement's WHERE position — after the whole
         # FROM clause (which may contain further joins)
-        rmask = _literal_mask(removed)
-        tm = next(iter(_depth0_matches(removed, _STMT_TAIL_KW_RE, rmask)),
+        tm = next(iter(_scan(removed).top_matches(_STMT_TAIL_KW_RE)),
                   None)
         if tm is None:
             new = f"{removed} WHERE {cond}"
@@ -10966,7 +10420,7 @@ def _rewrite_empty_grouping_global(sql: str) -> str:
     grouping columns, ORDER BY, set ops, windows, grouping() nested in
     larger expressions) passes through unchanged — those shapes keep
     today's behavior."""
-    masked = _mask_parens_and_literals(sql)
+    masked = _scan(sql).flat()
     if not re.match(r"\s*SELECT\b", masked, re.IGNORECASE):
         return sql
     gb = _GB_KEYWORD_RE.search(masked)
@@ -10994,7 +10448,7 @@ def _rewrite_empty_grouping_global(sql: str) -> str:
             if am.start() < pos:
                 continue
             resid.append(having_txt[pos : am.start()])
-            pos = _scan_matching_paren(having_txt, am.end())
+            pos = _scan(having_txt).close(am.end())
         resid.append(having_txt[pos:])
         if any(
             t.group(0).lower() not in _EGG_HAVING_OK
@@ -11008,18 +10462,18 @@ def _rewrite_empty_grouping_global(sql: str) -> str:
     )
     if cm is None:
         return sql
-    close = _scan_matching_paren(gb_txt, cm.end())
+    close = _scan(gb_txt).close(cm.end())
     if gb_txt[close:].strip():
         return sql
     inner = gb_txt[cm.end() : close - 1]
-    entries = _split_top_level(inner)
+    entries = _scan(inner).items()
     construct = " ".join(cm.group(1).upper().split())
     if construct == "GROUPING SETS":
         n_empty = sum(1 for e in entries if re.fullmatch(r"\(\s*\)", e))
         group_exprs = []
         for e in entries:
             if e.startswith("("):
-                group_exprs.extend(_split_top_level(e[1:-1]))
+                group_exprs.extend(_scan(e[1:-1]).items())
             else:
                 group_exprs.append(e)
     else:  # CUBE / ROLLUP expansions both include the global set once
@@ -11027,7 +10481,7 @@ def _rewrite_empty_grouping_global(sql: str) -> str:
         group_exprs = []
         for e in entries:
             if e.startswith("("):
-                group_exprs.extend(_split_top_level(e[1:-1]))
+                group_exprs.extend(_scan(e[1:-1]).items())
             else:
                 group_exprs.append(e)
     if n_empty == 0:
@@ -11036,7 +10490,7 @@ def _rewrite_empty_grouping_global(sql: str) -> str:
     def _strip_outer(e: str) -> str:
         # '(CASE .. END)' select item vs 'CASE .. END' grouping entry
         e = e.strip()
-        while e.startswith("(") and _scan_matching_paren(e, 1) == len(e):
+        while e.startswith("(") and _scan(e).close(1) == len(e):
             e = e[1:-1].strip()
         return e
 
@@ -11044,8 +10498,8 @@ def _rewrite_empty_grouping_global(sql: str) -> str:
     group_set = {norm(e) for e in group_exprs}
 
     arm_items = []
-    for item in _split_top_level(items_txt):
-        im = _mask_parens_and_literals(item)
+    for item in _scan(items_txt).items():
+        im = _scan(item).flat()
         am = re.search(r"\sAS\s+\w+\s*$", im, re.IGNORECASE)
         expr = item[: am.start()] if am else item
         gm = re.match(r"\s*grouping(?:_id)?\s*\(", expr, re.IGNORECASE)
@@ -11053,8 +10507,8 @@ def _rewrite_empty_grouping_global(sql: str) -> str:
             # grouping()/grouping_id() over grouping columns is a
             # compile-time constant on the global set: every argument is
             # un-grouped there, so the mask is all-ones (2^nargs - 1)
-            close = _scan_matching_paren(expr, gm.end())
-            gargs = _split_top_level(expr[gm.end() : close - 1])
+            close = _scan(expr).close(gm.end())
+            gargs = _scan(expr[gm.end() : close - 1]).items()
             if (
                 expr[close:].strip()
                 or not gargs
@@ -11101,21 +10555,6 @@ _DS_FIXED_WIDTH = {
 }
 
 
-def _ds_split_type_args(t: str) -> list[str]:
-    """Split a Spark simpleString type argument list on depth-0 commas."""
-    args, depth, last = [], 0, 0
-    for i, c in enumerate(t):
-        if c in "<(":
-            depth += 1
-        elif c in ">)":
-            depth -= 1
-        elif c == "," and depth == 0:
-            args.append(t[last:i])
-            last = i + 1
-    args.append(t[last:])
-    return [a.strip() for a in args]
-
-
 def _ds_of_type(e: str, t: str, depth: int = 0) -> str | None:
     """Per-value estimated-data-size expression for value ``e`` of Spark
     type ``t`` (simpleString grammar). NULL → 0, matching a null block
@@ -11142,7 +10581,7 @@ def _ds_of_type(e: str, t: str, depth: int = 0) -> str | None:
         return (f"IF({e} IS NULL, 0, aggregate({e}, CAST(0 AS BIGINT),"
                 f" ({v}a, {v}x) -> {v}a + CAST({inner} AS BIGINT)))")
     if t.startswith("map<"):
-        kt, vt = _ds_split_type_args(t[4:-1])
+        kt, vt = (a.strip() for a in _scan(t[4:-1]).split(",", "(<"))
         ik = _ds_of_type(f"{v}x", kt, depth + 1)
         iv = _ds_of_type(f"{v}x", vt, depth + 1)
         if ik is None or iv is None:
@@ -11156,7 +10595,7 @@ def _ds_of_type(e: str, t: str, depth: int = 0) -> str | None:
         )
     if t.startswith("struct<"):
         parts = []
-        for fld in _ds_split_type_args(t[7:-1]):
+        for fld in (a.strip() for a in _scan(t[7:-1]).split(",", "(<")):
             name, _, ft = fld.partition(":")
             sub = _ds_of_type(f"({e}).{name.strip()}", ft, depth)
             if sub is None:
@@ -11164,24 +10603,6 @@ def _ds_of_type(e: str, t: str, depth: int = 0) -> str | None:
             parts.append(sub)
         return "(" + " + ".join(parts) + ")" if parts else "0"
     return None
-
-
-def _ds_scan_bracket(s: str, start: int) -> int:
-    """Index just past the ``]`` matching the ``[`` at start-1
-    (literal- and paren-aware)."""
-    depth, j, in_str = 1, start, False
-    while j < len(s) and depth:
-        c = s[j]
-        if in_str:
-            in_str = c != "'"
-        elif c == "'":
-            in_str = True
-        elif c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        j += 1
-    return j
 
 
 _DS_CAST_TYPE_MAP = {
@@ -11198,12 +10619,12 @@ def _ds_expr(a: str, col_types: dict) -> str | None:
     ``a`` — syntactic recursion over constructor forms, catalog-type
     dispatch for leaves. None when the type cannot be derived."""
     a = a.strip()
-    while a.startswith("(") and _scan_matching_paren(a, 1) == len(a):
+    while a.startswith("(") and _scan(a).close(1) == len(a):
         a = a[1:-1].strip()
     # ARRAY[e1, e2, ...] constructor: sum of element sizes
     m = re.match(r"(?is)^ARRAY\s*\[", a)
-    if m and _ds_scan_bracket(a, m.end()) == len(a):
-        elems = _split_top_level(a[m.end():-1])
+    if m and _scan(a).close(m.end(), "([") == len(a):
+        elems = _scan(a[m.end():-1]).items()
         parts = [_ds_expr(e, col_types) for e in elems]
         if all(p is not None for p in parts):
             return "(" + " + ".join(parts) + ")" if parts else "0"
@@ -11211,18 +10632,18 @@ def _ds_expr(a: str, col_types: dict) -> str | None:
     # map(ARRAY[...], ARRAY[...]) / ROW(...) constructors
     for fname in ("map", "row"):
         m = re.match(rf"(?is)^{fname}\s*\(", a)
-        if m and _scan_matching_paren(a, m.end()) == len(a):
+        if m and _scan(a).close(m.end()) == len(a):
             parts = [
                 _ds_expr(e, col_types)
-                for e in _split_top_level(a[m.end():-1])
+                for e in _scan(a[m.end():-1]).items()
             ]
             if all(p is not None for p in parts):
                 return "(" + " + ".join(parts) + ")" if parts else "0"
             return None
     # IF(cond, a, b): size follows the taken branch (NULL branch → 0)
     m = re.match(r"(?is)^IF\s*\(", a)
-    if m and _scan_matching_paren(a, m.end()) == len(a):
-        parts = _split_top_level(a[m.end():-1])
+    if m and _scan(a).close(m.end()) == len(a):
+        parts = _scan(a[m.end():-1]).items()
         if len(parts) == 3:
             da = _ds_expr(parts[1], col_types)
             db = _ds_expr(parts[2], col_types)
@@ -11231,7 +10652,7 @@ def _ds_expr(a: str, col_types: dict) -> str | None:
         return None
     # CAST(x AS T): dispatch on the declared target type
     m = re.match(r"(?is)^(?:TRY_)?CAST\s*\(", a)
-    if m and _scan_matching_paren(a, m.end()) == len(a):
+    if m and _scan(a).close(m.end()) == len(a):
         tm = re.search(
             r"(?is)\bAS\s+([A-Za-z_]+)\s*(?:\(\s*(\d+)[^)]*\))?\s*\)$", a
         )

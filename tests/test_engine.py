@@ -197,6 +197,44 @@ def test_delete_from_managed_table(engine, spark):
         spark.sql("DROP TABLE IF EXISTS del_region")
 
 
+def test_delete_integer_division_predicate(engine, spark, duck):
+    # DELETE's predicate goes through the same rewrite as a SELECT:
+    # bigint / bigint truncates (BigintOperators.java divide)
+    spark.sql("DROP TABLE IF EXISTS del_lineitem")
+    engine.sql(
+        "CREATE TABLE del_lineitem USING parquet AS"
+        " SELECT l_orderkey, l_linenumber FROM lineitem"
+    ).collect()
+    try:
+        want = duck.execute(
+            "SELECT count(*) FROM lineitem WHERE l_orderkey // 4 = 10"
+        ).fetchone()[0]
+        assert want > 0
+        out = engine.sql(
+            "DELETE FROM del_lineitem WHERE l_orderkey / 4 = 10"
+        ).collect()
+        assert out[0].rows_deleted == want
+        assert spark.table("del_lineitem").where(
+            "l_orderkey BETWEEN 40 AND 43"
+        ).count() == 0
+    finally:
+        spark.sql("DROP TABLE IF EXISTS del_lineitem")
+
+
+def test_explain_analyze_integer_division(engine):
+    out = engine.sql(
+        "EXPLAIN ANALYZE SELECT a / b FROM (VALUES (5, 2)) t(a, b)"
+    ).collect()[0].query_plan
+    assert "(a div b)" in out
+
+
+def test_show_stats_query_integer_division(engine):
+    rows = engine.sql(
+        "SHOW STATS FOR (SELECT a / b AS q FROM (VALUES (5, 2)) t(a, b))"
+    ).collect()
+    assert {r.column_name: r for r in rows}["q"].high_value == "2"
+
+
 def test_transaction_grant_noops(engine):
     for stmt in (
         "START TRANSACTION",

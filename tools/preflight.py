@@ -14,6 +14,8 @@ Tiers (fastest first, so a red tier fails fast):
   scalar    tests/test_scalar_corpus.py   — the ported assertFunction corpus
   oracle    tests/test_oracle_parity.py   — DuckDB cross-checks
   rewrite   tests/test_rewrite.py         — rewrite-layer unit pins
+            tests/test_rewrite_golden.py  — byte-identical rewrite output
+                                            over the corpora
 
 Usage:
   python tools/preflight.py           # the default pre-commit tier set
@@ -32,7 +34,7 @@ import time
 TIERS = {
     "golden": ["tests/test_golden.py"],
     "property": ["tests/test_property.py"],
-    "rewrite": ["tests/test_rewrite.py"],
+    "rewrite": ["tests/test_rewrite.py", "tests/test_rewrite_golden.py"],
     "scalar": ["tests/test_scalar_corpus.py"],
     "oracle": ["tests/test_oracle_parity.py"],
 }
