@@ -489,13 +489,11 @@ class Engine:
                 f"Delete[{m.group(1)}] (rewrite-and-swap, "
                 f"rows_deleted={n})"
             )
-            return self.spark.createDataFrame(
-                [(plan,)], "query_plan string"
-            )
+            return self._local_row(":plan AS query_plan", plan=plan)
         df = self.spark.sql(self._rewrite(inner_sql))
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()  # type: ignore[attr-defined]
-        return self.spark.createDataFrame([(plan,)], "query_plan string")
+        return self._local_row(":plan AS query_plan", plan=plan)
 
     def _show_stats(self, target: str) -> DataFrame:
         """``SHOW STATS FOR table | (query)`` — Presto's ShowStatsRewrite
@@ -718,23 +716,35 @@ class Engine:
     def _delete(self, table: str, condition: str) -> DataFrame:
         """``DELETE FROM t WHERE cond`` (DeleteOperator/
         MetadataDeleteOperator analogue): rewrite-and-swap on the managed
-        table's storage via sources.delete_where, then refresh. Temp views
-        over the read-only testdata are refused — in the reference, DELETE
-        likewise needs a connector that supports it."""
-        bare = table.split(".")[-1]
-        for t_ in self.spark.catalog.listTables():
-            if t_.name == bare and t_.tableType == "TEMPORARY":
-                raise ValueError(
-                    f"DELETE not supported on read-only view {table!r}"
-                )
+        table's storage via sources.delete_where, then refresh. One Spark
+        job, the staged write, which also counts the deleted rows. Temp
+        views over the read-only testdata are refused — in the reference,
+        DELETE likewise needs a connector that supports it."""
+        if self.spark.catalog.getTable(table).tableType == "TEMPORARY":
+            raise ValueError(
+                f"DELETE not supported on read-only view {table!r}"
+            )
         desc = self.spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
         loc = next(r.data_type for r in desc if r.col_name == "Location")
         from .sources import delete_where
 
         path = loc[5:] if loc.startswith("file:") else loc
-        n = delete_where(self.spark, path, self._rewrite(condition))
+        n = delete_where(
+            self.spark, path, self._rewrite(condition),
+            schema=self.spark.table(table).schema,
+        )
         self.spark.sql(f"REFRESH TABLE {table}")
-        return self.spark.createDataFrame([(n,)], "rows_deleted long")
+        return self._local_row("CAST(:n AS BIGINT) AS rows_deleted", n=n)
+
+    def _local_row(self, select: str, **params) -> DataFrame:
+        """A one-row result that ``collect()`` serves without a Spark job:
+        the projection over VALUES folds into a local relation
+        (``createDataFrame`` and a SELECT without FROM each launch one).
+        Values come in as named parameters, so no literal is spliced into
+        the SQL text; no Column method is called either, because the
+        first one loads IPython into the driver (PySpark's call-site
+        capture imports it) and adds about 18 MB to its RSS."""
+        return self.spark.sql(f"SELECT {select} FROM VALUES (0)", params)
 
     def system_runtime_queries(self) -> DataFrame:
         """system.runtime.queries analogue: recent Spark jobs from the

@@ -177,6 +177,14 @@ def minhash_signatures_rowwise(df: DataFrame, text_col: str = "text",
     return hashed.selectExpr("id", *_MH_COLS_SQL)
 
 
+def check_max_bucket(max_bucket: int | None) -> None:
+    """A bucket cap admits at least one document: with 0 or less the
+    batch and streaming operators would disagree on what a full bucket
+    keeps."""
+    if max_bucket is not None and max_bucket < 1:
+        raise ValueError(f"max_bucket must be None or >= 1, got {max_bucket}")
+
+
 def lsh_candidate_pairs(
     sig: DataFrame, bands: int = 4, max_bucket: int | None = None
 ) -> DataFrame:
@@ -198,7 +206,8 @@ def lsh_candidate_pairs(
     Drop is the right semantic at scale: a bucket that large is an
     exact-duplicate cluster, which the exact/fingerprint dedup stage
     catches at O(b); run it first. Default None preserves exact
-    behavior."""
+    behavior; a cap must be at least 1."""
+    check_max_bucket(max_bucket)
     k = len(MINHASH_AB)
     rows = k // bands
     # one-parse SQL string (see shingles_sql: the Column-API form of this

@@ -706,6 +706,9 @@ SELECT DISTINCT id_a, id_b FROM cands
 """
 
 
+STREAM_TIMEOUT_S = 300  # streaming_lsh_dedup's wait for its availableNow query
+
+
 @q(
     "streaming_lsh_dedup",
     extended=True,
@@ -720,26 +723,39 @@ SELECT DISTINCT id_a, id_b FROM cands
     oracle=MINHASH_CANDS_ORACLE,
 )
 def streaming_lsh_dedup(spark, sf_dir):
+    import shutil
     import tempfile
 
     from ..streaming.dedup import streaming_lsh_candidates
 
     d = tempfile.mkdtemp(prefix="stream_lsh_")
-    near_corpus(spark, sf_dir).coalesce(2).write.mode("overwrite").parquet(d)
-    schema = spark.read.parquet(d).schema
-    stream = spark.readStream.schema(schema).parquet(d)
-    pairs = streaming_lsh_candidates(
-        stream, id_col="doc_id", max_bucket=None
-    )
-    spark.catalog.dropTempView("__stream_lsh_sink")  # idempotent re-run
-    query = (
-        pairs.writeStream.format("memory")
-        .queryName("__stream_lsh_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(300)
+    try:
+        near_corpus(spark, sf_dir).coalesce(2).write.mode(
+            "overwrite").parquet(d)
+        schema = spark.read.parquet(d).schema
+        stream = spark.readStream.schema(schema).parquet(d)
+        pairs = streaming_lsh_candidates(
+            stream, id_col="doc_id", max_bucket=None
+        )
+        spark.catalog.dropTempView("__stream_lsh_sink")  # idempotent re-run
+        query = (
+            pairs.writeStream.format("memory")
+            .queryName("__stream_lsh_sink")
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not query.awaitTermination(STREAM_TIMEOUT_S):
+            # the sink holds only the batches done so far: a partial pair
+            # set must not pass for the answer
+            query.stop()
+            raise TimeoutError(
+                f"streaming_lsh_dedup: stream not drained within "
+                f"{STREAM_TIMEOUT_S} s"
+            )
+    finally:
+        # the memory sink holds the pairs; the input files are done with
+        shutil.rmtree(d, ignore_errors=True)
     return spark.table("__stream_lsh_sink").select("id_a", "id_b").distinct()
 
 

@@ -282,8 +282,8 @@ FUNCTION_RENAMES: dict[str, str] = {
     # Spark's builtin returns a formatted STRING and cannot be shadowed.
     "from_unixtime": "timestamp_seconds",
     # Teradata compat (presto-teradata-functions DateFormatFunctions.java):
-    # MUST precede the from_iso8601 renames — those emit to_timestamp/
-    # to_date, which would otherwise be re-renamed by these entries.
+    # the from_iso8601 renames below emit to_timestamp/to_date, which
+    # _rename_functions does not rename a second time.
     "to_char": "teradata_to_char",
     "to_date": "teradata_to_date",
     "to_timestamp": "teradata_to_timestamp",
@@ -731,14 +731,19 @@ def _unnest_replacement(expr, ordinality, alias, col, col2) -> str:
     return f"LATERAL VIEW explode({expr}) {alias} AS {col}"
 
 
+# one pass: each call is renamed once, so a target that is also a source
+# (to_timestamp, to_date) is never renamed again
+_RENAME_RE = re.compile(
+    r"\b(" + "|".join(n for n, t in FUNCTION_RENAMES.items() if n != t)
+    + r")\s*\(",
+    re.IGNORECASE,
+)
+
+
 def _rename_functions(chunk: str) -> str:
-    for presto, spark in FUNCTION_RENAMES.items():
-        if presto == spark:
-            continue
-        chunk = re.sub(
-            rf"\b{presto}\s*\(", f"{spark}(", chunk, flags=re.IGNORECASE
-        )
-    return chunk
+    return _RENAME_RE.sub(
+        lambda m: FUNCTION_RENAMES[m.group(1).lower()] + "(", chunk
+    )
 
 
 # Presto allows unparameterized VARCHAR in casts; Spark requires a length

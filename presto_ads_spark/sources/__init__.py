@@ -21,6 +21,7 @@ joins without a shuffle) because those are the two knobs that matter at
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql.types import StructType
 
 FILE_FORMATS = ("parquet", "orc", "json", "csv", "text", "avro")
 
@@ -128,33 +129,83 @@ def delete_partitions(spark: SparkSession, path: str, **partition_values) -> int
 
 
 def delete_where(spark: SparkSession, path: str, condition: str,
-                 fmt: str = "parquet") -> int:
+                 fmt: str = "parquet", schema: StructType | None = None) -> int:
     """Row-level DELETE via staged rewrite (DeleteOperator analogue,
     reference operator/DeleteOperator.java:39 — there it needs connector
-    support; on plain files it's rewrite-and-swap).
+    support; on plain files it's rewrite-and-swap). Returns rows deleted.
 
-    Reads, anti-filters, writes to a staging dir, swaps atomically-ish.
-    At 100 TB you'd do this per-partition (combine with partition pruning
-    on ``condition``) or use a table format (Delta/Iceberg) — this is the
-    dependency-free form. Returns rows deleted."""
+    One Spark job: the write of the kept rows to a staging directory. Two
+    observations on that job count the rows read and the rows kept, so the
+    count comes from the write, as TableFinishOperator takes it from the
+    writers, not from rescans. Pass the table's ``schema`` to skip the
+    schema-inference job of the read.
+
+    The swap renames ``path`` aside, renames the staging directory into
+    its place, then removes the old data: a crash leaves the old table or
+    the new one at ``path``, and at worst a stray ``.__staging_*`` or
+    ``.__old_*`` directory beside it. The DELETE runs in a clone of
+    ``spark``, and the temp view and both directories are named per call,
+    so concurrent DELETEs on different paths share nothing. At 100 TB you'd do this per-partition (combine with partition
+    pruning on ``condition``) or use a table format (Delta/Iceberg) — this
+    is the dependency-free form."""
+    import os
     import shutil
+    import uuid
 
-    df = spark.read.format(fmt).load(path)
-    before = df.count()
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    # Observations register with their DataFrame's session, and a session
+    # that has used one can no longer be serialized (Spark 4.1's
+    # SparkSession.observationManager is not transient): every task whose
+    # closure reaches the session, such as a LinearSVC model holding its
+    # training summary, would then fail. A clone (same catalog, temp
+    # views, functions and conf) runs the DELETE instead.
+    session = SparkSession(
+        spark.sparkContext, spark._jsparkSession.cloneSession()
+    )
+    tag = uuid.uuid4().hex
+    view = f"__delete_target_{tag}"
+    path = path.rstrip("/")
+    staging = f"{path}.__staging_{tag}"
+    old = f"{path}.__old_{tag}"
+    reader = session.read.format(fmt)
+    if schema is not None:
+        reader = reader.schema(schema)
+    source = reader.load(path)
+    read, kept = Observation(), Observation()
     # DELETE removes only rows where the condition is TRUE (Presto/SQL
     # semantics): NULL-condition rows must be KEPT, so the keep-filter is
     # NOT coalesce(cond, false), not a bare NOT(cond). Routed through
     # spark.sql over a temp view so the condition may contain subqueries
     # (DELETE ... WHERE k IN (SELECT ...)) — DataFrame.filter can't.
-    df.createOrReplaceTempView("__delete_target")
-    kept = spark.sql(
-        f"SELECT * FROM __delete_target"
-        f" WHERE NOT coalesce(({condition}), false)"
-    )
-    staging = path.rstrip("/") + ".__staging__"
-    kept.write.format(fmt).mode("overwrite").save(staging)
-    spark.catalog.dropTempView("__delete_target")
-    after = spark.read.format(fmt).load(staging).count()
-    shutil.rmtree(path)
-    shutil.move(staging, path)
-    return before - after
+    # count(1) via F.expr: a Column method here would load IPython into
+    # the driver (see Engine._local_row)
+    source.observe(read, F.expr("count(1)")).createOrReplaceTempView(view)
+    try:
+        rest = session.sql(
+            f"SELECT * FROM {view} WHERE NOT coalesce(({condition}), false)"
+        )
+        rest.observe(kept, F.expr("count(1)")).write.format(fmt).save(staging)
+        n_read = _observed_count(read)
+        if n_read is None:
+            n_read = source.count()
+        # at the root of the written plan, so never pruned
+        n_kept = _observed_count(kept)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    finally:
+        session.catalog.dropTempView(view)
+    os.rename(path, old)
+    os.rename(staging, path)
+    shutil.rmtree(old)
+    return n_read - n_kept
+
+
+def _observed_count(observation) -> int | None:
+    """The count an observation took, or None when its row is empty: the
+    optimizer dropped the observed node (a keep filter that folds to false
+    prunes the scan under it: DELETE without WHERE)."""
+    row = observation._jo.getRow()
+    return row.getLong(0) if row.length() else None

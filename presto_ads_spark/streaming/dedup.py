@@ -43,7 +43,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..llm.dedup import MINHASH_AB, MINHASH_P, md5_hash_sql, shingles_sql
+from ..llm.dedup import (
+    MINHASH_AB,
+    MINHASH_P,
+    check_max_bucket,
+    md5_hash_sql,
+    shingles_sql,
+)
 
 PAIR_OUTPUT = StructType(
     [
@@ -212,7 +218,8 @@ def streaming_lsh_candidates(
     deduplicate downstream (``dropDuplicates`` with a watermark, or in the
     sink). With ``max_bucket=None`` the emitted pair set over the whole
     stream equals the batch ``lsh_candidate_pairs`` result on the same
-    documents (stream/batch parity — tested)."""
+    documents (stream/batch parity — tested). A cap must be at least 1."""
+    check_max_bucket(max_bucket)
     sig = streaming_signatures(docs, text_col, id_col)
     e = band_entries(sig, bands)
     timeout = (

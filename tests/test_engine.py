@@ -3,6 +3,11 @@ SET SESSION, catalog statements through ``engine.sql``."""
 
 from __future__ import annotations
 
+import threading
+import uuid
+
+import pytest
+
 from tests.conftest import SF_DIR
 
 
@@ -219,6 +224,117 @@ def test_delete_integer_division_predicate(engine, spark, duck):
         ).count() == 0
     finally:
         spark.sql("DROP TABLE IF EXISTS del_lineitem")
+
+
+def _jobs_during(spark, fn):
+    """Spark jobs that ``fn`` launches from this thread (job group plus
+    the status tracker, read after the listener bus has drained)."""
+    sc = spark.sparkContext
+    group = f"counted-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_delete_runs_one_spark_job(engine, spark):
+    # the staged write is the only job: the deleted-row count comes from
+    # observations on it, the result row is a local relation
+    spark.sql("DROP TABLE IF EXISTS del_onejob")
+    engine.sql(
+        "CREATE TABLE del_onejob USING parquet AS SELECT * FROM nation"
+    ).collect()
+    try:
+        res = {}
+
+        def delete():
+            res["df"] = engine.sql("DELETE FROM del_onejob WHERE n_regionkey = 1")
+            res["rows"] = res["df"].collect()
+
+        assert _jobs_during(spark, delete) == 1
+        assert res["df"].schema.simpleString() == "struct<rows_deleted:bigint>"
+        assert res["rows"][0].rows_deleted == 5
+        assert spark.table("del_onejob").count() == 20
+    finally:
+        spark.sql("DROP TABLE IF EXISTS del_onejob")
+
+
+@pytest.mark.parametrize("where, deleted", [
+    # r is NULL for the five region-0 nations: NULL is not TRUE, they stay
+    ("WHERE r > 2", 10),
+    ("WHERE n_nationkey IN (SELECT c_nationkey FROM customer"
+     " WHERE c_acctbal > 9000)", None),
+    ("", 25),
+    ("WHERE n_nationkey < 0", 0),
+], ids=["null_predicate", "in_subquery", "no_where", "matches_nothing"])
+def test_delete_count_is_before_minus_after(engine, spark, where, deleted):
+    spark.sql("DROP TABLE IF EXISTS del_counted")
+    engine.sql(
+        "CREATE TABLE del_counted USING parquet AS SELECT n_nationkey,"
+        " CASE WHEN n_regionkey > 0 THEN n_regionkey END AS r FROM nation"
+    ).collect()
+    try:
+        before = spark.table("del_counted").count()
+        out = engine.sql(f"DELETE FROM del_counted {where}").collect()
+        after = spark.table("del_counted").count()
+        assert out[0].rows_deleted == before - after
+        if deleted is not None:
+            assert out[0].rows_deleted == deleted
+        else:
+            assert 0 < out[0].rows_deleted < before
+    finally:
+        spark.sql("DROP TABLE IF EXISTS del_counted")
+
+
+def test_concurrent_deletes_on_two_tables(engine, spark):
+    names = ("del_conc_a", "del_conc_b")
+    for name in names:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        engine.sql(
+            f"CREATE TABLE {name} USING parquet AS SELECT * FROM nation"
+        ).collect()
+    out, errors = {}, []
+
+    def run(name, region):
+        try:
+            out[name] = engine.sql(
+                f"DELETE FROM {name} WHERE n_regionkey <= {region}"
+            ).collect()[0].rows_deleted
+        except Exception as e:  # surfaced below, not lost in the thread
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(n, r))
+               for n, r in zip(names, (0, 2))]
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=300)
+        assert not any(th.is_alive() for th in threads)
+        assert errors == []
+        assert out == {"del_conc_a": 5, "del_conc_b": 15}
+        assert spark.table("del_conc_a").where(
+            "n_regionkey <= 0").count() == 0
+        assert spark.table("del_conc_a").count() == 20
+        assert spark.table("del_conc_b").count() == 10
+    finally:
+        for name in names:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_explain_analyze_result_is_local(engine, spark):
+    out = []
+    jobs = _jobs_during(spark, lambda: out.extend(engine.sql(
+        "EXPLAIN ANALYZE SELECT a FROM (VALUES (1), (2)) t(a)").collect()))
+    # the inner query is a local relation, and so is the plan row
+    assert jobs == 0
+    assert "LocalTableScan" in out[0].query_plan
+    assert engine.sql(
+        "EXPLAIN ANALYZE SELECT 1"
+    ).schema.simpleString() == "struct<query_plan:string>"
 
 
 def test_explain_analyze_integer_division(engine):

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from presto_ads_spark.queries._util import t
@@ -297,6 +298,14 @@ def test_lsh_bucket_cap_excises_hot_bucket(spark):
     capped = dedup.minhash_near_dups(df, threshold=0.5, max_bucket=5)
     got = {(r.id_a, r.id_b) for r in capped.collect()}
     assert (10, 11) in got and not any(a < 6 for a, _ in got)
+
+
+@pytest.mark.parametrize("cap", [0, -1])
+def test_lsh_bucket_cap_must_be_positive(spark, cap):
+    from presto_ads_spark.llm.dedup import lsh_candidate_pairs
+
+    with pytest.raises(ValueError, match="max_bucket"):
+        lsh_candidate_pairs(spark.range(1), max_bucket=cap)
 
 
 def test_ngram_jaccard_carry_cols_and_zero_overlap(spark):

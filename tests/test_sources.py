@@ -3,6 +3,9 @@ INSERT/views, memory + blackhole sinks (SURVEY.md §2.5)."""
 
 from __future__ import annotations
 
+import os
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -117,6 +120,74 @@ def test_delete_where_null_condition_keeps_rows(spark, tmp_path):
     assert deleted == 1
     kept = {r.id for r in sources.read(spark, "parquet", path).collect()}
     assert kept == {2, 3}
+
+
+def _delete_views(spark):
+    return [v.name for v in spark.catalog.listTables()
+            if v.name.startswith("__delete_target")]
+
+
+def test_delete_where_swaps_without_leftovers(spark, tmp_path):
+    df = t(spark, SF_DIR, "nation")
+    path = str(tmp_path / "nation_swap")
+    sources.write(df, "parquet", path)
+    assert sources.delete_where(spark, path + "/", "n_regionkey < 2",
+                                schema=df.schema) == 10
+    assert sorted(os.listdir(tmp_path)) == ["nation_swap"]
+    assert _delete_views(spark) == []
+    assert sources.read(spark, "parquet", path).count() == 15
+
+
+def test_delete_where_failure_keeps_table(spark, tmp_path):
+    df = t(spark, SF_DIR, "nation")
+    path = str(tmp_path / "nation_keep")
+    sources.write(df, "parquet", path)
+    with pytest.raises(Exception, match="no_such_column"):
+        sources.delete_where(spark, path, "no_such_column = 1")
+    assert sorted(os.listdir(tmp_path)) == ["nation_keep"]
+    assert _delete_views(spark) == []
+    assert sources.read(spark, "parquet", path).count() == 25
+
+
+def test_delete_where_leaves_session_serializable(spark, tmp_path):
+    # a session that has used an Observation cannot be Java-serialized any
+    # more, which fails every task whose closure reaches it (LinearSVC
+    # scoring through a model that holds its training summary)
+    df = t(spark, SF_DIR, "nation")
+    path = str(tmp_path / "nation_ser")
+    sources.write(df, "parquet", path)
+    assert sources.delete_where(spark, path, "n_regionkey = 3") == 5
+    jvm = spark._jvm
+    jvm.java.io.ObjectOutputStream(
+        jvm.java.io.ByteArrayOutputStream()
+    ).writeObject(spark._jsparkSession)
+
+
+def test_delete_where_concurrent_paths(spark, tmp_path):
+    df = t(spark, SF_DIR, "nation")
+    paths = [str(tmp_path / f"nation_{i}") for i in range(2)]
+    for path in paths:
+        sources.write(df, "parquet", path)
+    out, errors = {}, []
+
+    def run(path, cond):
+        try:
+            out[path] = sources.delete_where(spark, path, cond)
+        except Exception as e:  # surfaced below, not lost in the thread
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=a) for a in
+               zip(paths, ("n_regionkey = 0", "n_regionkey > 0"))]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=300)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    assert out == dict(zip(paths, (5, 20)))
+    assert [sources.read(spark, "parquet", p).count() for p in paths] == [
+        20, 5]
+    assert sorted(os.listdir(tmp_path)) == ["nation_0", "nation_1"]
 
 
 def test_decoders_json_csv_raw(spark):

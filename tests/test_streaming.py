@@ -284,6 +284,31 @@ def test_streaming_lsh_bucket_cap(spark, tmp_path):
     assert per_band and all(n <= 10 for n in per_band.values())
 
 
+@pytest.mark.parametrize("cap", [0, -1])
+def test_streaming_lsh_bucket_cap_must_be_positive(spark, cap):
+    from presto_ads_spark.streaming import dedup as sdedup
+
+    with pytest.raises(ValueError, match="max_bucket"):
+        sdedup.streaming_lsh_candidates(spark.range(1), max_bucket=cap)
+
+
+def test_streaming_lsh_dedup_timeout_raises(spark, tmp_path, monkeypatch):
+    """A stream that is not drained in time is stopped and raises instead
+    of returning the pairs of the batches done so far; its input
+    directory is removed either way."""
+    import tempfile
+
+    from presto_ads_spark.queries import llm
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(llm, "STREAM_TIMEOUT_S", 0.001)
+    with pytest.raises(TimeoutError, match="not drained"):
+        llm.streaming_lsh_dedup(spark, SF_DIR)
+    assert os.listdir(tmp_path) == []
+    assert not [q for q in spark.streams.active
+                if q.name == "__stream_lsh_sink"]
+
+
 def test_streaming_lsh_rocksdb_state_store(spark, docs_two_batches, tmp_path):
     """State-scale evidence: the same stream/batch candidate parity (and
     the bucket saturation cap) hold under the RocksDB state store

@@ -16,11 +16,17 @@ Tiers (fastest first, so a red tier fails fast):
   rewrite   tests/test_rewrite.py         — rewrite-layer unit pins
             tests/test_rewrite_golden.py  — byte-identical rewrite output
                                             over the corpora
+  writes    tests/test_sources.py         — connector writes, DELETE
+            tests/test_distributed_writes.py — CTAS/INSERT/DELETE/ALTER
+                                            sequences (not in the default
+                                            set; run it for write-path
+                                            changes)
 
 Usage:
   python tools/preflight.py           # the default pre-commit tier set
   python tools/preflight.py --full    # entire tests/ directory
   python tools/preflight.py golden    # one named tier
+  python tools/preflight.py writes    # a tier outside the default set
 
 Exit status is pytest's: 0 = green, anything else = DO NOT COMMIT.
 """
@@ -37,6 +43,7 @@ TIERS = {
     "rewrite": ["tests/test_rewrite.py", "tests/test_rewrite_golden.py"],
     "scalar": ["tests/test_scalar_corpus.py"],
     "oracle": ["tests/test_oracle_parity.py"],
+    "writes": ["tests/test_sources.py", "tests/test_distributed_writes.py"],
 }
 DEFAULT = ["golden", "rewrite", "property", "scalar", "oracle"]
 
