@@ -280,9 +280,11 @@ class Engine:
         dvotes: dict[str, set[bool]] = {}
         svotes: dict[str, set[bool]] = {}
         tvotes: dict[str, set[str]] = {}
-        for tbl in self.spark.catalog.listTables():
+        # SHOW TABLES lists the same names as catalog.listTables(), which
+        # launches Spark jobs on every call
+        for tbl in self.spark.sql("SHOW TABLES").collect():
             try:
-                for f in self.spark.table(tbl.name).schema.fields:
+                for f in self.spark.table(tbl.tableName).schema.fields:
                     t = f.dataType.simpleString()
                     tvotes.setdefault(f.name.lower(), set()).add(t)
                     votes.setdefault(f.name.lower(), set()).add(t in integral)
@@ -663,13 +665,16 @@ class Engine:
     # -- system / information_schema connectors (reference:
     #    presto-main/.../connector/system/, connector/informationSchema/) --
     def information_schema_columns(self) -> DataFrame:
-        """information_schema.columns synthesized from the session catalog."""
+        """information_schema.columns synthesized from the session catalog.
+
+        Names and types come from SHOW TABLES and each table's schema, the
+        same values catalog.listTables()/listColumns() give; those launch
+        Spark jobs on every call (two per table for listColumns)."""
         rows = []
-        for tbl in self.spark.catalog.listTables():
-            for col in self.spark.catalog.listColumns(tbl.name):
-                rows.append(
-                    (tbl.database or "default", tbl.name, col.name, col.dataType)
-                )
+        for tbl in self.spark.sql("SHOW TABLES").collect():
+            for f in self.spark.table(tbl.tableName).schema.fields:
+                rows.append((tbl.namespace or "default", tbl.tableName,
+                             f.name, f.dataType.simpleString()))
         return self.spark.createDataFrame(
             rows, "table_schema string, table_name string, column_name string, data_type string"
         )

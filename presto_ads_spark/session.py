@@ -65,7 +65,27 @@ DEFAULT_CONF: dict[str, str] = {
     # (StringFunctions.fromUtf8); this flips Spark's decode() from
     # FAIL to the same REPLACE action, keeping the shim JVM-side.
     "spark.sql.legacy.codingErrorAction": "true",
+    # PySpark's call-site capture (errors/utils.py _with_origin) costs
+    # every classic Column method a stack walk and ~4 py4j calls, and its
+    # first call imports IPython into the driver (~540 modules, ~18 MB
+    # RSS); a failed `import ipykernel` is retried on every call. Errors
+    # lose only the Python line of the DataFrame call that built the
+    # failing expression. Read once per process, on the first Column
+    # call with an active session.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """A quarter of host memory, at least 1 GiB, as a JVM size (``3g``
+    on a 15 GB host). A quarter never overcommits the host and grows with
+    it as local[*] parallelism does; without /proc/meminfo, 1 GiB."""
+    try:
+        with open(meminfo, encoding="ascii") as f:
+            total_kb = int(f.readline().split()[1])  # MemTotal: <n> kB
+    except (OSError, ValueError, IndexError):
+        return "1g"
+    return f"{max(1, total_kb // (4 << 20))}g"
 
 
 def get_spark(
@@ -88,13 +108,13 @@ def get_spark(
     # default heap is 1 GiB — 32 concurrent tasks' sort/join spill buffers
     # OOM there long before any plan problem shows up (the round-5 sf1
     # bench died in an SMJ spill-read exactly this way). Size the heap
-    # like an executor's instead; on a real cluster this key is untouched
-    # and executor memory is what you tune.
+    # from the host instead; on a real cluster this key is untouched and
+    # executor memory is what you tune.
     resolved_master = master or f"local[{cpus}]"
     if resolved_master.startswith("local"):
         conf.setdefault(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
     for k, v in conf.items():
         builder = builder.config(k, v)

@@ -79,6 +79,10 @@ BUCKET_STATE = StructType(
 # revert — but on a stream the alternative is the 16x md5 re-evaluation,
 # not a cached array, so the tradeoff flips; measured 13.9 -> see
 # OPTIMIZATION_r14.md.)
+# The fold starts each minimum at the MINHASH_P sentinel (every real
+# value is < MINHASH_P) and its finish turns a sentinel left standing into
+# NULL: that is batch array_min's answer when no hash is non-NULL, as for
+# NULL text where size(NULL) is -1 (ANSI off) and the shingle is NULL.
 _SIG_FOLD_SQL = (
     "aggregate({hashes}, "
     + "named_struct("
@@ -89,7 +93,10 @@ _SIG_FOLD_SQL = (
         f"'mh{i}', least(acc.mh{i}, ({a} * h + {b}) % {MINHASH_P})"
         for i, (a, b) in enumerate(MINHASH_AB)
     )
-    + "), acc -> acc)"
+    + "), acc -> named_struct("
+    + ", ".join(f"'mh{i}', nullif(acc.mh{i}, {MINHASH_P})"
+                for i in range(len(MINHASH_AB)))
+    + "))"
 )
 
 
@@ -97,9 +104,10 @@ def streaming_signatures(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
 ) -> DataFrame:
     """Row-wise MinHash signatures for a STREAMING frame — identical
-    permutations/shingles (and bit-identical minima) to the batch
-    ``minhash_signatures_rowwise``, restructured as a single fold because
-    streaming frames can't cache the hash-array staging projection."""
+    permutations/shingles (and bit-identical minima, NULL for NULL text)
+    to the batch ``minhash_signatures_rowwise``, restructured as a single
+    fold because streaming frames can't cache the hash-array staging
+    projection."""
     toked = docs.selectExpr(
         f"`{id_col}` AS id", f"split(`{text_col}`, ' ') AS __t"
     )

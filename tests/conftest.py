@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
@@ -28,3 +29,17 @@ def duck():
     from presto_ads_spark.testing import duckdb_connection
 
     return duckdb_connection(SF_DIR)
+
+
+def jobs_during(spark, fn):
+    """Spark jobs that ``fn`` launches from this thread (job group plus
+    the status tracker, read after the listener bus has drained)."""
+    sc = spark.sparkContext
+    group = f"counted-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -4,11 +4,10 @@ SET SESSION, catalog statements through ``engine.sql``."""
 from __future__ import annotations
 
 import threading
-import uuid
 
 import pytest
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_during
 
 
 def test_show_tables(engine):
@@ -226,20 +225,6 @@ def test_delete_integer_division_predicate(engine, spark, duck):
         spark.sql("DROP TABLE IF EXISTS del_lineitem")
 
 
-def _jobs_during(spark, fn):
-    """Spark jobs that ``fn`` launches from this thread (job group plus
-    the status tracker, read after the listener bus has drained)."""
-    sc = spark.sparkContext
-    group = f"counted-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "counted")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_delete_runs_one_spark_job(engine, spark):
     # the staged write is the only job: the deleted-row count comes from
     # observations on it, the result row is a local relation
@@ -254,7 +239,7 @@ def test_delete_runs_one_spark_job(engine, spark):
             res["df"] = engine.sql("DELETE FROM del_onejob WHERE n_regionkey = 1")
             res["rows"] = res["df"].collect()
 
-        assert _jobs_during(spark, delete) == 1
+        assert jobs_during(spark, delete) == 1
         assert res["df"].schema.simpleString() == "struct<rows_deleted:bigint>"
         assert res["rows"][0].rows_deleted == 5
         assert spark.table("del_onejob").count() == 20
@@ -327,7 +312,7 @@ def test_concurrent_deletes_on_two_tables(engine, spark):
 
 def test_explain_analyze_result_is_local(engine, spark):
     out = []
-    jobs = _jobs_during(spark, lambda: out.extend(engine.sql(
+    jobs = jobs_during(spark, lambda: out.extend(engine.sql(
         "EXPLAIN ANALYZE SELECT a FROM (VALUES (1), (2)) t(a)").collect()))
     # the inner query is a local relation, and so is the plan row
     assert jobs == 0
@@ -335,6 +320,46 @@ def test_explain_analyze_result_is_local(engine, spark):
     assert engine.sql(
         "EXPLAIN ANALYZE SELECT 1"
     ).schema.simpleString() == "struct<query_plan:string>"
+
+
+def test_show_tables_lists_the_catalog_names(engine, spark):
+    # the Engine lists tables with SHOW TABLES in place of listTables()
+    shown = {r.tableName for r in spark.sql("SHOW TABLES").collect()}
+    assert shown == {t.name for t in spark.catalog.listTables()}
+    assert "lineitem" in shown
+
+
+def test_information_schema_columns_match_the_catalog_listing(engine, spark):
+    # the listing starts no job (collecting the local rows may)
+    out = {}
+    assert jobs_during(spark, lambda: out.update(
+        df=engine.information_schema_columns())) == 0
+    rows = out["df"].collect()
+    want = {
+        (t.database or "default", t.name, c.name, c.dataType)
+        for t in spark.catalog.listTables()
+        for c in spark.catalog.listColumns(t.name)
+    }
+    assert {tuple(r) for r in rows} == want
+
+
+def test_engine_construction_starts_no_spark_job(engine, spark):
+    # the fixture engine has read every table's schema already
+    from presto_ads_spark.engine import Engine
+
+    assert jobs_during(
+        spark, lambda: Engine(spark, sf_dir=SF_DIR, register_functions=False)
+    ) == 0
+
+
+def test_create_view_starts_no_spark_job(engine, spark):
+    try:
+        assert jobs_during(spark, lambda: engine.sql(
+            "CREATE VIEW nojob_v AS SELECT n_nationkey / 2 AS nojob_half FROM nation"
+        ).collect()) == 0
+        assert "nojob_half" in engine._int_cols
+    finally:
+        engine.sql("DROP VIEW IF EXISTS nojob_v")
 
 
 def test_explain_analyze_integer_division(engine):

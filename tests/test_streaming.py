@@ -284,6 +284,43 @@ def test_streaming_lsh_bucket_cap(spark, tmp_path):
     assert per_band and all(n <= 10 for n in per_band.values())
 
 
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_streaming_signatures_equal_batch_with_null_text(spark, tmp_path, ansi):
+    """Signatures of a stream equal the batch ones row for row, NULL minima
+    for NULL text included (size(NULL) is -1 with ANSI off, NULL with it
+    on; batch array_min gives NULL either way)."""
+    from presto_ads_spark.llm import dedup as batch_dedup
+    from presto_ads_spark.streaming import dedup as sdedup
+
+    d = str(tmp_path / "docs")
+    rows = [(1, None), (2, ""), (3, "two words"),
+            (4, "the quick brown fox jumps over"), (5, None)]
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(
+        1
+    ).write.parquet(d)
+    was = spark.conf.get("spark.sql.ansi.enabled")
+    name = f"sig_stream_{ansi}"
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        docs = spark.read.parquet(d)
+        stream = spark.readStream.schema(docs.schema).parquet(d)
+        q = (
+            sdedup.streaming_signatures(stream).writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(180)
+        got = sorted(spark.table(name).collect())
+        want = sorted(batch_dedup.minhash_signatures_rowwise(docs).collect())
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", was)
+    assert got == want and len(got) == len(rows)
+    nulls = [r for r in got if r.id in (1, 5)]
+    assert all(v is None for r in nulls for v in list(r)[1:])
+
+
 @pytest.mark.parametrize("cap", [0, -1])
 def test_streaming_lsh_bucket_cap_must_be_positive(spark, cap):
     from presto_ads_spark.streaming import dedup as sdedup

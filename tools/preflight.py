@@ -17,6 +17,8 @@ Tiers (fastest first, so a red tier fails fast):
             tests/test_rewrite_golden.py  — byte-identical rewrite output
                                             over the corpora
   writes    tests/test_sources.py         — connector writes, DELETE
+            tests/test_catalog.py         — parquet schema cache: a file
+                                            rewritten in place re-infers
             tests/test_distributed_writes.py — CTAS/INSERT/DELETE/ALTER
                                             sequences (not in the default
                                             set; run it for write-path
@@ -43,7 +45,8 @@ TIERS = {
     "rewrite": ["tests/test_rewrite.py", "tests/test_rewrite_golden.py"],
     "scalar": ["tests/test_scalar_corpus.py"],
     "oracle": ["tests/test_oracle_parity.py"],
-    "writes": ["tests/test_sources.py", "tests/test_distributed_writes.py"],
+    "writes": ["tests/test_sources.py", "tests/test_catalog.py",
+               "tests/test_distributed_writes.py"],
 }
 DEFAULT = ["golden", "rewrite", "property", "scalar", "oracle"]
 
